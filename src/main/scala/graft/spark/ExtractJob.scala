@@ -1,6 +1,7 @@
 package graft.spark
 
-import org.apache.spark.sql.{DataFrame, Dataset, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Encoders, SaveMode, SparkSession}
+import org.apache.spark.util.AccumulatorV2
 import org.apache.spark.sql.functions._
 import java.sql.Timestamp
 import scala.util.control.NonFatal
@@ -21,22 +22,100 @@ final case class LineageRow(
     byte_count: Long,
     failure_count: Long,
     status: String,
-    run_id: String)
+    run_id: String,
+    buckets: Int,
+    salt: Int)
+
+/** One bucket's lineage counters. `warc_ts_min`/`warc_ts_max` skip nulls
+  * and stay null when every row of the bucket has a null `warc_ts` — the
+  * semantics of SQL `min`/`max`. */
+private[spark] final class BucketStats extends Serializable {
+  var docs = 0L
+  var bytes = 0L
+  var failures = 0L
+  var tsMin: Timestamp = null
+  var tsMax: Timestamp = null
+
+  def add(ts: Timestamp, htmlBytes: Long, failed: Boolean): Unit = {
+    docs += 1
+    bytes += htmlBytes
+    if (failed) failures += 1
+    tsMin = BucketStats.earlier(tsMin, ts)
+    tsMax = BucketStats.later(tsMax, ts)
+  }
+
+  def merge(o: BucketStats): Unit = {
+    docs += o.docs
+    bytes += o.bytes
+    failures += o.failures
+    tsMin = BucketStats.earlier(tsMin, o.tsMin)
+    tsMax = BucketStats.later(tsMax, o.tsMax)
+  }
+}
+
+private[spark] object BucketStats {
+  // null-skipping; `Timestamp` order includes the sub-millisecond nanos
+  def earlier(a: Timestamp, b: Timestamp): Timestamp =
+    if (a == null || (b != null && b.before(a))) b else a
+  def later(a: Timestamp, b: Timestamp): Timestamp =
+    if (a == null || (b != null && b.after(a))) b else a
+}
+
+/** Per-bucket lineage of the rows that stream into the extracted-table
+  * writer; `value(b)` is null for a bucket that saw no row. Bucket ids
+  * index the array directly (`bucketCol` yields `[0, buckets)`). */
+private[spark] final class LineageAccumulator(buckets: Int)
+    extends AccumulatorV2[ExtractedRow, Array[BucketStats]] {
+  private val stats = new Array[BucketStats](buckets)
+
+  def isZero: Boolean = stats.forall(_ == null)
+  def copy(): LineageAccumulator = {
+    val c = new LineageAccumulator(buckets)
+    c.merge(this)
+    c
+  }
+  override def copyAndReset(): LineageAccumulator = new LineageAccumulator(buckets)
+  def reset(): Unit = stats.indices.foreach(stats(_) = null)
+
+  def add(r: ExtractedRow): Unit = {
+    var s = stats(r.bucket)
+    if (s == null) { s = new BucketStats; stats(r.bucket) = s }
+    s.add(r.warc_ts, r.html_bytes, r.failed)
+  }
+
+  def merge(other: AccumulatorV2[ExtractedRow, Array[BucketStats]]): Unit = {
+    val o = other.value
+    for (b <- 0 until buckets if o(b) != null) {
+      if (stats(b) == null) stats(b) = new BucketStats
+      stats(b).merge(o(b))
+    }
+  }
+
+  def value: Array[BucketStats] = stats
+}
 
 /** The corpus-scale extraction pipeline (north rule):
   *
   *  - **partitioning / skew**: pages are bucketed by `pmod(hash(url, salt),
   *    buckets)` — an explicit salted url-hash so power-law hosts cannot pin a
   *    partition; the same expression is the physical repartition key, so one
-  *    shuffle co-locates each bucket and the writer emits one directory per
-  *    bucket.
+  *    shuffle co-locates each bucket and the writer emits one directory (and
+  *    one file) per bucket. The exchange carries no partition count: Spark
+  *    never coalesces an explicitly sized shuffle, while AQE sizes this one
+  *    by bytes, so write tasks follow the data, not the bucket count.
   *  - **lineage / exactly-once resume**: one lineage row per bucket (ts
-  *    range, doc/byte/failure counts) derived by AGGREGATING THE WRITTEN
-  *    OUTPUT — idempotent by construction (no accumulator best-effort
-  *    semantics across stage retries, no driver-side dedup), one cheap
-  *    column-pruned scan (never reads `text`). Rerunning skips buckets
-  *    already recorded `done`; dynamic partition overwrite makes
-  *    re-extraction of a half-written bucket idempotent.
+  *    range, doc/byte/failure counts), counted by a [[LineageAccumulator]]
+  *    in the `mapPartitions` that feeds the writer — no read-back of the
+  *    written output. Extraction runs in the write job's RESULT stage, and
+  *    the DAGScheduler applies a result task's accumulator update once per
+  *    output partition (later successes of the same partition — speculative
+  *    or resubmitted — are ignored) and drops the updates of failed and
+  *    commit-denied attempts (`countFailedValues = false`). So each written
+  *    row is counted exactly once, and the counts describe exactly the
+  *    committed output. Rerunning skips buckets already recorded `done`;
+  *    dynamic partition overwrite makes re-extraction of a half-written
+  *    bucket idempotent. ([[StreamingExtract.startWithLineage]] keeps a
+  *    read-back instead: a replayed micro-batch would count twice.)
   *  - **per-row engine, zero per-row allocation churn**: `mapPartitions`
   *    with the thread-local arena in [[Extractor]]. Every per-row failure
   *    (parse error, pathological input, null timestamp) yields a null-text
@@ -47,23 +126,27 @@ final case class LineageRow(
   */
 object ExtractJob {
 
-  /** `preShuffled = true` skips the bucket repartition: correct whenever
+  /** Pipeline knobs.
+    *
+    * `preShuffled = true` skips the bucket repartition: correct whenever
     * the input is already laid out bucket-aligned (e.g. a previous run's
     * output, or a corpus stored partitioned by this job's own bucket
     * expression) — extraction then runs map-only, zero exchanges, which is
     * the re-run shape you want at 100 TB. The bucket column is still
     * computed for lineage/output partitioning; only the shuffle is skipped
     * (buckets land wherever the files are, which is exactly co-located for
-    * bucket-aligned storage). */
-  /** `rowGroupBytes` caps the parquet row-group size of the extracted
+    * bucket-aligned storage).
+    *
+    * `rowGroupBytes` caps the parquet row-group size of the extracted
     * output (`parquet.block.size`). Scan-split planning on parquet can
     * parallelize at row-group granularity, so a bucket file holding many
     * row groups is readable by many tasks — downstream parallelism is then
     * independent of the FILE count (one file per bucket here), which is
     * what survives a 100× scale-up without re-tuning `buckets`. 32 MB ≈
     * 4 row groups per default 128 MB scan split: enough split freedom,
-    * still large enough for dictionary/statistics efficiency. */
-  /** `clean = true` runs the training-data cleanup on each extracted
+    * still large enough for dictionary/statistics efficiency.
+    *
+    * `clean = true` runs the training-data cleanup on each extracted
     * text inside the SAME per-row pass (no extra stage, no plan change):
     * [[TextNorm.fixText]] (mojibake repair + NFC + control strip) then
     * [[TextNorm.scrubPii]] (email/IPv4/phone redaction). Clean ASCII
@@ -81,6 +164,8 @@ object ExtractJob {
   def bucketCol(salt: Int, buckets: Int) =
     pmod(hash(col("url"), lit(salt)), lit(buckets))
 
+  private val lineageSchema = Encoders.product[LineageRow].schema
+
   /** run extraction over a pages dataframe, writing extracted + lineage
     * tables under outDir; resumes from lineage when present. */
   def run(spark: SparkSession, pages: DataFrame, outDir: String, cfg: Config = Config()): Unit = {
@@ -90,25 +175,26 @@ object ExtractJob {
 
     val done: Set[Int] =
       if (fsExists(spark, lineagePath)) {
-        val lin = spark.read.parquet(lineagePath)
+        // one collect serves both the config guard and the done set; the
+        // fixed schema skips inference, and lineage written before the
+        // config columns existed reads them as null (accepted as-is)
+        val recs = spark.read.schema(lineageSchema).parquet(lineagePath)
+          .select(col("partition_id"), col("status"), col("buckets"), col("salt"))
+          .as[(Int, String, Option[Int], Option[Int])].collect()
         // resume-config guard: lineage partition ids are only meaningful
         // under the bucketing that produced them — resuming with a
         // different buckets/salt would subtract stale ids from a REMAPPED
-        // space and silently skip data. Rows written before the config
-        // columns existed are accepted as-is (legacy lineage).
-        if (lin.columns.contains("buckets")) {
-          val cfgs = lin.select(col("buckets").as[Int], col("salt").as[Int])
-            .distinct().collect()
-          cfgs.foreach { case (b, sa) =>
+        // space and silently skip data
+        recs.foreach {
+          case (_, _, Some(b), Some(sa)) =>
             require(b == cfg.buckets && sa == cfg.salt,
               s"lineage at $lineagePath was written with buckets=$b salt=$sa; " +
                 s"resuming with buckets=${cfg.buckets} salt=${cfg.salt} would " +
                 "silently skip remapped data — use a fresh outDir or the " +
                 "original config")
-          }
+          case _ =>
         }
-        lin.where(col("status") === "done")
-          .select("partition_id").as[Int].collect().toSet
+        recs.collect { case (id, "done", _, _) => id }.toSet
       } else Set.empty
 
     val withBucket = pages
@@ -116,20 +202,17 @@ object ExtractJob {
     val pending =
       if (done.isEmpty) withBucket
       else withBucket.where(!col("bucket").isInCollection(done))
-    // nothing to do (empty corpus, or every bucket already done): return
-    // before writing — a zero-row partitioned write emits no data files,
-    // and the lineage read-back of an empty directory cannot infer a
-    // schema (AnalysisException). isEmpty is a limit(1) probe.
-    if (pending.isEmpty) return
 
     val recipe = cfg.recipe
     val doClean = cfg.clean
+    val lineage = new LineageAccumulator(cfg.buckets)
+    spark.sparkContext.register(lineage)
 
     // one shuffle co-locates buckets (salted url hash) — or none at all
     // when the input is already bucket-aligned storage
     val shuffled =
       if (cfg.preShuffled) pending
-      else pending.repartition(cfg.buckets, col("bucket"))
+      else pending.repartition(col("bucket"))
     val extracted: Dataset[ExtractedRow] = shuffled
       .select(col("bucket"), col("url"), col("warc_ts"), col("html"))
       .as[(Int, String, Timestamp, Array[Byte])]
@@ -142,13 +225,15 @@ object ExtractJob {
           val text =
             if (raw == null || !doClean) raw
             else TextNorm.scrubPii(TextNorm.fixText(raw))
-          ExtractedRow(b, url, ts, bytes, text == null, text)
+          val row = ExtractedRow(b, url, ts, bytes, text == null, text)
+          lineage.add(row)
+          row
         }
       }
 
-    // idempotent per-bucket overwrite => exactly-once on resume;
-    // parquet.block.size bounds row groups so each bucket file stays
-    // splittable (see Config.rowGroupBytes)
+    // idempotent per-bucket overwrite => exactly-once on resume; a zero-row
+    // write touches no partition. parquet.block.size bounds row groups so
+    // each bucket file stays splittable (see Config.rowGroupBytes)
     extracted.toDF()
       .write
       .partitionBy("bucket")
@@ -157,27 +242,14 @@ object ExtractJob {
       .mode(SaveMode.Overwrite)
       .parquet(extractedPath)
 
-    // lineage FROM the written data: column pruning keeps this scan tiny
-    // (bucket/warc_ts/html_bytes/failed only — never the text column)
-    val written = spark.read.parquet(extractedPath)
-      .where(if (done.isEmpty) lit(true) else !col("bucket").isInCollection(done))
-    val runId = cfg.runId
-    val lineage = written.groupBy(col("bucket"))
-      .agg(
-        min(col("warc_ts")).as("warc_ts_min"),
-        max(col("warc_ts")).as("warc_ts_max"),
-        count(lit(1)).as("doc_count"),
-        sum(col("html_bytes")).as("byte_count"),
-        sum(col("failed").cast("long")).as("failure_count"))
-      .select(
-        col("bucket").cast("int").as("partition_id"),
-        col("warc_ts_min"), col("warc_ts_max"),
-        col("doc_count"), col("byte_count"), col("failure_count"),
-        lit("done").as("status"), lit(runId).as("run_id"),
-        lit(cfg.buckets).as("buckets"), lit(cfg.salt).as("salt"))
-    lineage
-      .repartition(1)
-      .write.mode(SaveMode.Append).parquet(lineagePath)
+    // nothing extracted (empty corpus, or every bucket already done): no
+    // lineage rows, and no lineage table is created
+    val rows = lineage.value.iterator.zipWithIndex.collect { case (s, b) if s != null =>
+      LineageRow(b, s.tsMin, s.tsMax, s.docs, s.bytes, s.failures,
+        "done", cfg.runId, cfg.buckets, cfg.salt)
+    }.toSeq
+    if (rows.nonEmpty)
+      rows.toDS().coalesce(1).write.mode(SaveMode.Append).parquet(lineagePath)
   }
 
   /** spark-submit entry:
@@ -202,7 +274,7 @@ object ExtractJob {
         if (fsExists(spark, s"$in/documents.parquet")) PagesGen.asDataFrame(spark, in)
         else spark.read.parquet(in)
       run(spark, pages, outDir, Config(buckets, salt, runId, preShuffled = preShuffled))
-      // run() no-ops on an empty corpus without creating the lineage table.
+      // run() creates no lineage table when it extracts no row.
       if (fsExists(spark, s"$outDir/lineage"))
         spark.read.parquet(s"$outDir/lineage").orderBy("partition_id").show(20, truncate = false)
       else println(s"graft-extract: no work (empty corpus), no lineage written to $outDir")

@@ -54,11 +54,14 @@ object StreamingExtract {
     * idempotently: exactly-once lineage without accumulators.
     *
     * Lineage is aggregated by RE-READING the just-written batch partitions
-    * column-pruned (bucket/warc_ts/html_bytes/failed — never `text`),
-    * exactly like [[ExtractJob]]'s derive-from-output design: extraction
-    * runs once, nothing is persisted, and the aggregate scans only the
-    * small columns. The `failed` boolean is materialized at write time so
-    * the read-back can prune the text column. */
+    * column-pruned (bucket/warc_ts/html_bytes/failed — never `text`):
+    * extraction runs once, nothing is persisted, and the aggregate scans
+    * only the small columns. The `failed` boolean is materialized at write
+    * time so the read-back can prune the text column. [[ExtractJob]]
+    * counts its lineage with an accumulator in the write's result tasks
+    * instead; that cannot serve here, because a replayed micro-batch runs
+    * its write job again and would be counted twice, while the read-back
+    * of the overwritten partitions is idempotent. */
   def startWithLineage(spark: SparkSession, pagesDir: String, outDir: String,
       buckets: Int = 64, salt: Int = 42): StreamingQuery = {
     val pages = spark.readStream

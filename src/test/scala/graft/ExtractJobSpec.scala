@@ -127,8 +127,8 @@ class ExtractJobSpec extends AnyFunSuite with BeforeAndAfterAll {
   test("empty input and fully-done resume: clean no-ops, never a crash") {
     val out = java.nio.file.Files.createTempDirectory("graft-empty").toString
     val none = PagesGen.asDataFrame(spark, sfDir).where(lit(false))
-    // zero-row first run: returns before writing (a zero-row partitioned
-    // write has no data files and the lineage read-back can't infer schema)
+    // zero-row first run: the write touches no partition and, with no
+    // lineage rows counted, no lineage table is created
     ExtractJob.run(spark, none, out, ExtractJob.Config(buckets = 2, runId = "empty"))
     assert(!new java.io.File(s"$out/lineage").exists())
     // full run, then a resume where every bucket is already done
