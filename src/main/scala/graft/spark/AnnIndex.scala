@@ -766,7 +766,7 @@ private[spark] trait AnnIndexOps extends AnnCoreOps {
       .map(n => java.net.URLDecoder.decode(n.substring("batch=".length), "UTF-8"))
       .filterNot(_ == target)
     if (old.isEmpty) return
-    val planes = readMeta(spark, indexDir)._1
+    val (planes, _, _, _, version) = readMeta(spark, indexDir)
     val quant = readAssignQuantizer(spark, indexDir)
 
     // the union of every live vector (deduped below, per path)
@@ -780,9 +780,13 @@ private[spark] trait AnnIndexOps extends AnnCoreOps {
     // published radii batch) upper-bound the raw row count — a crashed
     // append only OVER-counts — and are usually cache-seeded by the
     // preceding build/append (zero jobs; at worst one tiny radii read).
-    // Within budget → one plain parallel collect of the small table.
+    // Within budget → one plain parallel collect of the small table. An
+    // index older than v5 has no counts (read as 0, which bounds nothing):
+    // its size is unknown, so it takes the distributed path — the same
+    // version gate as appendAnnIndex.
     val approxRows =
-      if (driverVecBudget > 0) readQuantizer(spark, indexDir)._3.sum else Long.MaxValue
+      if (driverVecBudget > 0 && version == AnnIndexVersion) readQuantizer(spark, indexDir)._3.sum
+      else Long.MaxValue
     val headOpt: Option[Array[(Long, Seq[Float])]] =
       if (approxRows <= driverVecBudget) Some(vecsAll.collect()) else None
 

@@ -181,15 +181,6 @@ private[spark] trait AnnProbeOps extends AnnIndexOps {
       .orderBy("qid", "rank")
   }
 
-  /** multi-query LSH ANN eval with a CROSS-ENGINE oracle: emits the exact
-    * top-k (qid, rank, vec_id) computed over multi-probe LSH candidates; the
-    * DuckDB oracle recomputes per-query brute-force top-k independently via
-    * list_cosine_similarity, so any candidate-set miss (recall < 1 at the
-    * probed radius) hash-mismatches — the recall bit is no longer
-    * self-graded. Window-per-qid is eval-harness shape; the production
-    * single-query path is [[annLshIndexed]] (TakeOrdered, pruned read).
-    * `materialize = false` returns the lazy plan (the persisted signature
-    * frame then stays cached until the caller releases it). */
   /** Spark's double sort semantics for the local eval fast paths:
     * -0.0 == 0.0 (SQLOrderingUtil), descending by score, vec_id tiebreak
     * — matches the distributed windows' (cos desc, vec_id) exactly. */
@@ -199,6 +190,17 @@ private[spark] trait AnnProbeOps extends AnnIndexOps {
       if (c != 0) c < 0 else a._1 < b._1
     }.take(k)
 
+  /** multi-query LSH ANN eval with a CROSS-ENGINE oracle: emits the exact
+    * top-k (qid, rank, vec_id) computed over multi-probe LSH candidates; the
+    * DuckDB oracle recomputes per-query brute-force top-k independently via
+    * list_cosine_similarity, so any candidate-set miss (recall < 1 at the
+    * probed radius) hash-mismatches — the recall bit is no longer
+    * self-graded. Window-per-qid is eval-harness shape; the production
+    * single-query path is [[annLshIndexed]] (TakeOrdered, pruned read).
+    * On the distributed path `materialize = false` returns the lazy plan
+    * (the persisted signature frame is released, the plan recomputes).
+    * The driver fast path (at most `driverVecBudget` vectors) always
+    * returns a materialized local relation, whatever `materialize` says. */
   def annLshTopKEval(spark: SparkSession, sfDir: String, m: Int, k: Int,
       radius: Int = 2, materialize: Boolean = true,
       driverVecBudget: Int = AnnDriverVecBudget): DataFrame = {
@@ -271,7 +273,10 @@ private[spark] trait AnnProbeOps extends AnnIndexOps {
     * yet confirm get a phase-2 pass over exactly the lists that could
     * still hold a better candidate. Inherently two-phase/eager (the
     * expansion depends on phase-1 scores); window-per-qid is eval shape —
-    * the production single-query path is [[annIvfIndexed]]. */
+    * the production single-query path is [[annIvfIndexed]]. Like
+    * [[annLshTopKEval]], the driver fast path (at most `driverVecBudget`
+    * vectors) always returns a materialized local relation, whatever
+    * `materialize` says. */
   def annIvfTopKEval(spark: SparkSession, sfDir: String, m: Int, k: Int,
       nprobe: Int = 6, materialize: Boolean = true,
       driverVecBudget: Int = AnnDriverVecBudget): DataFrame = {

@@ -1,6 +1,7 @@
 package graft.spark
 
 import graft.dom.{Arena, Entities}
+import graft.html.ParseOptions
 import graft.query.VDoc
 
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
@@ -146,7 +147,7 @@ object DensityExtract extends Serializable {
   def extractCodegenBinary(html: Array[Byte]): UTF8String = {
     if (html == null) return null
     try {
-      val doc = Extractor.parseBytesCrawl(html)
+      val doc = Extractor.parseShared(html, ParseOptions.crawl)
       if (doc == null) return null
       UTF8String.fromString(extract(doc))
     } catch {

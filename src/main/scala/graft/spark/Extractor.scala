@@ -14,6 +14,17 @@ import java.util.concurrent.ConcurrentHashMap
   * stays flat at 10^12-document scale. Selectors are parsed once per JVM and
   * cached (the reference parses per query too — `mesdoc::init` + lazy_static
   * caches, reference `src/mesdoc/selector/rule.rs:10-12`).
+  *
+  * A page parses once per row across the read-only `extract_*` entries
+  * (text, count, attrs, html, links, anchors, canonical, refresh, and
+  * [[MetaOps]] / [[DensityExtract]]): they share the thread's last clean
+  * parse of the same bytes ([[parseShared]]). The public parse entries
+  * ([[parse]], [[parseCrawl]], [[parseBytes]], [[parseBytesCrawl]]) hand
+  * out the thread's live arena instead: the [[VDoc]] is valid only until
+  * this thread's next parse, the caller may mutate it, and it is never a
+  * memoized doc — each of them forgets the memo before parsing, as does
+  * `extract_main` (its strip walk removes nodes), so no doc that a caller
+  * may have mutated is ever reused.
   */
 object Extractor extends Serializable {
 
@@ -46,55 +57,98 @@ object Extractor extends Serializable {
     parsed
   }
 
-  /** parse into the thread-local arena; null on parse failure. Same
-    * giant-page shrink guard as [[parseBytes]] — STRING-column workloads
-    * must not pin a rare huge page's buffers either. */
-  def parse(html: String): VDoc = {
-    var arena = arenas.get()
-    if (arena.buf.length > ArenaShrinkChars && html.length < (ArenaShrinkChars >> 3)) {
-      arena = new graft.dom.Arena(1024)
-      arenas.set(arena)
-    }
-    Parser.parseInto(arena, html, ParseOptions.compat) match {
-      case Some(_) => null
-      case None => new VDoc(arena)
-    }
-  }
-
-  /** [[parse]] under the CRAWL profile (compat fixes + HTML5 implicit
-    * tree): implied html/head/body + auto-close, for real crawl pages
-    * that never wrote `<body>`. */
-  def parseCrawl(html: String): VDoc = {
-    var arena = arenas.get()
-    if (arena.buf.length > ArenaShrinkChars && html.length < (ArenaShrinkChars >> 3)) {
-      arena = new graft.dom.Arena(1024)
-      arenas.set(arena)
-    }
-    Parser.parseInto(arena, html, ParseOptions.crawl) match {
-      case Some(_) => null
-      case None => new VDoc(arena)
-    }
-  }
-
   /** a rare giant page must not pin executor memory forever: drop the
     * thread-local arena back to a fresh one when its buffers grew far beyond
     * what the current row needs. */
   private final val ArenaShrinkChars = 32 << 20
 
+  private def threadArena(srcLen: Int): Arena = {
+    val arena = arenas.get()
+    if (arena.buf.length > ArenaShrinkChars && srcLen < (ArenaShrinkChars >> 3)) {
+      val fresh = new Arena(1024)
+      arenas.set(fresh)
+      fresh
+    } else arena
+  }
+
+  /** parse into the thread-local arena; null on parse failure. */
+  def parse(html: String): VDoc = parseStringWith(html, ParseOptions.compat)
+
+  /** [[parse]] under the CRAWL profile (compat fixes + HTML5 implicit
+    * tree): implied html/head/body + auto-close, for real crawl pages
+    * that never wrote `<body>`. */
+  def parseCrawl(html: String): VDoc = parseStringWith(html, ParseOptions.crawl)
+
+  private def parseStringWith(html: String, opts: ParseOptions): VDoc = {
+    forgetShared()
+    val arena = threadArena(html.length)
+    Parser.parseInto(arena, html, opts) match {
+      case Some(_) => null
+      case None => new VDoc(arena)
+    }
+  }
+
   /** parse UTF-8 bytes into the thread-local arena (no intermediate String /
     * char[] garbage); null on parse failure. */
-  def parseBytes(html: Array[Byte]): VDoc = parseBytesWith(html, ParseOptions.compat)
+  def parseBytes(html: Array[Byte]): VDoc = {
+    forgetShared()
+    parseBytesWith(html, ParseOptions.compat)
+  }
+
+  /** [[parseBytes]] under the CRAWL profile — see [[parseCrawl]]. */
+  def parseBytesCrawl(html: Array[Byte]): VDoc = {
+    forgetShared()
+    parseBytesWith(html, ParseOptions.crawl)
+  }
 
   private def parseBytesWith(html: Array[Byte], opts: ParseOptions): VDoc = {
-    var arena = arenas.get()
-    if (arena.buf.length > ArenaShrinkChars && html.length < (ArenaShrinkChars >> 3)) {
-      arena = new graft.dom.Arena(1024)
-      arenas.set(arena)
-    }
+    val arena = threadArena(html.length)
     Parser.parseIntoUtf8(arena, html, opts) match {
       case Some(_) => null
       case None => new VDoc(arena)
     }
+  }
+
+  /** The thread's last clean parse, kept for the read-only entries. The
+    * source bytes are not stored: `resetFromUtf8` copied them to
+    * `doc.arena.buf[0, len)` and the parser only appends past them, so the
+    * arena's own copy is the key. Content is compared, never array
+    * identity, because Spark reuses row buffers. `doc == null` means
+    * nothing is memoized. */
+  private final class ParseMemo {
+    var doc: VDoc = null
+    var opts: ParseOptions = null
+    var len: Int = 0
+  }
+
+  private val memos = new ThreadLocal[ParseMemo] {
+    override def initialValue(): ParseMemo = new ParseMemo
+  }
+
+  private def forgetShared(): Unit = memos.get().doc = null
+
+  /** Parse for entries that only read the doc: when the thread's last
+    * clean parse was of the same bytes under the same profile, and the
+    * thread's arena is still the arena holding it, return that same
+    * [[VDoc]] instead of parsing again. So the read-only `extract_*`
+    * calls of one row parse the page once. Null on parse failure (never
+    * memoized). Callers must not mutate the result. */
+  private[spark] def parseShared(html: Array[Byte],
+      opts: ParseOptions = ParseOptions.compat): VDoc = {
+    val m = memos.get()
+    val hit = m.doc
+    if (hit != null && (m.opts eq opts) && m.len == html.length &&
+      (hit.arena eq arenas.get()) &&
+      java.util.Arrays.equals(hit.arena.buf, 0, html.length, html, 0, html.length))
+      return hit
+    m.doc = null // a parse that throws leaves nothing memoized
+    val doc = parseBytesWith(html, opts)
+    if (doc != null) {
+      m.doc = doc
+      m.opts = opts
+      m.len = html.length
+    }
+    doc
   }
 
   /** node-local simples (tag/class/id/attr): match is independent of the
@@ -202,6 +256,24 @@ object Extractor extends Serializable {
     false
   }
 
+  /** the fused fast path of extract_text/attrs/count: find()'s doc-order
+    * union-with-dedup over simple comma groups IS one doc-order walk
+    * testing each element once (nested matches included, exactly like the
+    * general engine). Calls `hit` on every element below `node` that
+    * matches any of `compounds`, in document order. */
+  private def forEachMatch(doc: VDoc, compounds: Array[Array[graft.selector.Simple]],
+      node: Int)(hit: Int => Unit): Unit = {
+    val a = doc.arena
+    var c = a.firstChild(node)
+    while (c >= 0) {
+      if (a.kind(c) == a.ELEM) {
+        if (matchesAnyCompound(doc, c, compounds)) hit(c)
+        forEachMatch(doc, compounds, c)(hit)
+      }
+      c = a.nextSib(c)
+    }
+  }
+
   /** pick the recipe's main-content element set after boilerplate removal;
     * selectors come from the per-JVM parse cache.
     *
@@ -260,9 +332,6 @@ object Extractor extends Serializable {
     if (doc == null) return null
     selectMain(doc, recipe).text()
   }
-
-  /** [[parseBytes]] under the CRAWL profile — see [[parseCrawl]]. */
-  def parseBytesCrawl(html: Array[Byte]): VDoc = parseBytesWith(html, ParseOptions.crawl)
 
   /** main-content extraction: remove boilerplate, pick the first matching
     * main-content candidate, return its text(). Null on parse failure. */
@@ -399,28 +468,15 @@ object Extractor extends Serializable {
       selector: org.apache.spark.unsafe.types.UTF8String): org.apache.spark.unsafe.types.UTF8String = {
     if (html == null || selector == null) return null
     try {
-      val doc = parseBytes(html)
+      val doc = parseShared(html)
       if (doc == null) return null
       val selStr = selector.toString
       val compounds = compiledCompounds(selStr)
       val ub = outBuilder()
       ub.reset()
       if (compounds != null) {
-        // fused fast path: find()'s doc-order union-with-dedup over simple
-        // comma groups IS one doc-order walk testing each element once
-        // (nested matches included, exactly like the general engine)
         val a = doc.arena
-        def rec(node: Int): Unit = {
-          var c = a.firstChild(node)
-          while (c >= 0) {
-            if (a.kind(c) == a.ELEM) {
-              if (matchesAnyCompound(doc, c, compounds)) a.textContentUtf8(c, ub)
-              rec(c)
-            }
-            c = a.nextSib(c)
-          }
-        }
-        rec(0)
+        forEachMatch(doc, compounds, 0)(c => a.textContentUtf8(c, ub))
       } else compiled(selStr) match {
         case Left(_) => return null
         case Right(sel) =>
@@ -462,7 +518,7 @@ object Extractor extends Serializable {
       sel: org.apache.spark.unsafe.types.UTF8String): org.apache.spark.sql.catalyst.util.ArrayData = {
     if (html == null || sel == null) return null
     try {
-      val doc = parseBytes(html)
+      val doc = parseShared(html)
       if (doc == null) return null
       attrsToArrayData(extractOuterHtmlFrom(doc, sel.toString))
     } catch {
@@ -509,28 +565,17 @@ object Extractor extends Serializable {
       attr: org.apache.spark.unsafe.types.UTF8String): org.apache.spark.sql.catalyst.util.ArrayData = {
     if (html == null || sel == null || attr == null) return null
     try {
-      val doc = parseBytes(html)
+      val doc = parseShared(html)
       if (doc == null) return null
       val selStr = sel.toString
       val attrName = attr.toString
       val compounds = compiledCompounds(selStr)
       if (compounds != null) {
-        // fused walk (same contract as extract_text: doc order, each node
-        // tested once); only matched elements' attr values materialize
-        val a = doc.arena
+        // only matched elements' attr values materialize
         val out = new scala.collection.mutable.ArrayBuffer[String](8)
-        def rec(node: Int): Unit = {
-          var c = a.firstChild(node)
-          while (c >= 0) {
-            if (a.kind(c) == a.ELEM) {
-              if (matchesAnyCompound(doc, c, compounds))
-                new graft.query.Elems(doc, Array(c)).attr(attrName).foreach(v => out += v.value)
-              rec(c)
-            }
-            c = a.nextSib(c)
-          }
+        forEachMatch(doc, compounds, 0) { c =>
+          new graft.query.Elems(doc, Array(c)).attr(attrName).foreach(v => out += v.value)
         }
-        rec(0)
         attrsToArrayData(out.toArray)
       } else attrsToArrayData(extractAttrsFrom(doc, selStr, attrName))
     } catch {
@@ -553,24 +598,13 @@ object Extractor extends Serializable {
       sel: org.apache.spark.unsafe.types.UTF8String): java.lang.Long = {
     if (html == null || sel == null) return null
     try {
-      val doc = parseBytes(html)
+      val doc = parseShared(html)
       if (doc == null) return null
       val selStr = sel.toString
       val compounds = compiledCompounds(selStr)
       if (compounds != null) {
-        val a = doc.arena
         var count = 0L
-        def rec(node: Int): Unit = {
-          var c = a.firstChild(node)
-          while (c >= 0) {
-            if (a.kind(c) == a.ELEM) {
-              if (matchesAnyCompound(doc, c, compounds)) count += 1
-              rec(c)
-            }
-            c = a.nextSib(c)
-          }
-        }
-        rec(0)
+        forEachMatch(doc, compounds, 0)(_ => count += 1)
         java.lang.Long.valueOf(count)
       } else compiled(selStr) match {
         case Left(_) => null
@@ -630,7 +664,7 @@ object Extractor extends Serializable {
       base: org.apache.spark.unsafe.types.UTF8String): org.apache.spark.sql.catalyst.util.ArrayData = {
     if (html == null || base == null) return null
     try {
-      val doc = parseBytes(html)
+      val doc = parseShared(html)
       if (doc == null) return null
       val pageUrl = base.toString
       val effBase = effectiveBase(doc, pageUrl)
@@ -671,7 +705,7 @@ object Extractor extends Serializable {
       base: org.apache.spark.unsafe.types.UTF8String): org.apache.spark.sql.catalyst.util.ArrayData = {
     if (html == null || base == null) return null
     try {
-      val doc = parseBytes(html)
+      val doc = parseShared(html)
       if (doc == null) return null
       val effBase = effectiveBase(doc, base.toString)
       val bSplit = UrlOps.split(UrlOps.preClean(effBase))
@@ -715,7 +749,7 @@ object Extractor extends Serializable {
       base: org.apache.spark.unsafe.types.UTF8String): org.apache.spark.unsafe.types.UTF8String = {
     if (html == null || base == null) return null
     try {
-      val doc = parseBytes(html)
+      val doc = parseShared(html)
       if (doc == null) return null
       val url = findRelUrl(doc, base.toString)
       if (url == null) null else org.apache.spark.unsafe.types.UTF8String.fromString(url)
@@ -785,7 +819,7 @@ object Extractor extends Serializable {
       base: org.apache.spark.unsafe.types.UTF8String): org.apache.spark.unsafe.types.UTF8String = {
     if (html == null || base == null) return null
     try {
-      val doc = parseBytes(html)
+      val doc = parseShared(html)
       if (doc == null) return null
       val url = findRefreshUrl(doc, base.toString)
       if (url == null) null else org.apache.spark.unsafe.types.UTF8String.fromString(url)

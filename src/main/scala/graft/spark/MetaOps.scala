@@ -163,7 +163,7 @@ object MetaOps {
   def titleCodegenBinary(html: Array[Byte]): UTF8String = {
     if (html == null) return null
     try {
-      val doc = Extractor.parseBytes(html)
+      val doc = Extractor.parseShared(html)
       if (doc == null) return null
       val p = extract(doc)
       if (p == null || p.meta.title == null) null
@@ -180,7 +180,7 @@ object MetaOps {
   def metaCodegenBinary(html: Array[Byte]): InternalRow = {
     if (html == null) return null
     try {
-      val doc = Extractor.parseBytes(html)
+      val doc = Extractor.parseShared(html)
       if (doc == null) return null
       val p = extract(doc)
       if (p == null) return null
@@ -201,7 +201,7 @@ object MetaOps {
   def jsonLdCodegenBinary(html: Array[Byte]): org.apache.spark.sql.catalyst.util.ArrayData = {
     if (html == null) return null
     try {
-      val doc = Extractor.parseBytes(html)
+      val doc = Extractor.parseShared(html)
       if (doc == null) return null
       val p = extract(doc)
       if (p == null) return null

@@ -223,6 +223,65 @@ class RoundSevenOptSpec extends AnyFunSuite with BeforeAndAfterAll {
     }
   }
 
+  test("compactAnnIndex: a pre-v5 index (radii without cnt) takes the distributed path, same probes") {
+    val emb = synthEmb(300)
+    val base = java.nio.file.Files.createTempDirectory("ann-v4").toString
+    def delete(path: String): Unit =
+      org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(path))
+    try {
+      val v5 = s"$base/v5"
+      val v4 = s"$base/v4"
+      for (dir <- Seq(v5, v4)) {
+        TextOps.buildAnnIndex(spark, emb.where(col("vec_id") % 2 === 0), dir)
+        TextOps.appendAnnIndex(spark, emb.where(col("vec_id") % 2 === 1), dir, "b1")
+      }
+      // the v4 shape: meta version 4, radii batches without the cnt column
+      def rewrite(section: String, partitionBy: Seq[String])(
+          f: org.apache.spark.sql.DataFrame => org.apache.spark.sql.DataFrame): Unit = {
+        val tmp = s"$base/tmp-$section"
+        f(spark.read.parquet(s"$v4/$section")).write.partitionBy(partitionBy: _*).parquet(tmp)
+        delete(s"$v4/$section")
+        assert(new java.io.File(tmp).renameTo(new java.io.File(s"$v4/$section")))
+      }
+      rewrite("meta", Nil)(_.withColumn("version", lit(4)))
+      rewrite("radii", Seq("batch"))(_.drop("cnt"))
+      assert(!spark.read.parquet(s"$v4/radii").columns.contains("cnt"))
+
+      // the distributed path is the one that localCheckpoints the vectors
+      // (stage names are the action's call site)
+      def compactCallSites(dir: String): Seq[String] = {
+        val sites = java.util.Collections.synchronizedList(new java.util.ArrayList[String]())
+        val listener = new org.apache.spark.scheduler.SparkListener {
+          override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+            e.stageInfos.foreach(st => sites.add(st.name))
+        }
+        spark.sparkContext.addSparkListener(listener)
+        try {
+          TextOps.compactAnnIndex(spark, dir, epoch = "1")
+          org.apache.spark.TestBus.drain(spark.sparkContext)
+        } finally spark.sparkContext.removeSparkListener(listener)
+        scala.jdk.CollectionConverters.ListHasAsScala(sites).asScala.toSeq
+      }
+      val distSites = compactCallSites(v4)
+      val fastSites = compactCallSites(v5)
+      assert(distSites.exists(_.startsWith("localCheckpoint")),
+        s"a v4 index must compact on the distributed path: $distSites")
+      assert(!fastSites.exists(_.startsWith("localCheckpoint")),
+        s"a small v5 index compacts on the driver path: $fastSites")
+
+      val sf = s"$base/sf"
+      emb.write.parquet(s"$sf/embeddings.parquet")
+      for (q <- Seq(0L, 7L, 123L)) {
+        def lsh(dir: String) = TextOps.annLshIndexed(spark, sf, dir, q, 5, radius = 2)
+          .collect().map(_.getLong(1)).toSeq
+        def ivf(dir: String) = TextOps.annIvfIndexed(spark, sf, dir, q, 5)
+          .collect().map(_.getLong(1)).toSeq
+        assert(lsh(v4) == lsh(v5), s"LSH probe q=$q")
+        assert(ivf(v4) == ivf(v5), s"IVF probe q=$q")
+      }
+    } finally delete(base)
+  }
+
   test("ANN evals: driver fast path == distributed harness rows") {
     val sf = java.nio.file.Files.createTempDirectory("ann-eval-eq").toString
     try {
