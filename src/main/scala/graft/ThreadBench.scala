@@ -24,9 +24,6 @@ object ThreadBench {
     // the extract_main Catalyst expression calls (UTF-8 in, UTF-8 out);
     // extractMain(String-out) adds a UTF-16 materialization the SQL path
     // never pays (~13% per the round-3 JFR)
-    // SPARK_GRAFT_ZEROCOPY=1 swaps in the slab-wrapping output variant
-    // (extractMainCodegenView) to measure the output-copy lever
-    val zeroCopy = sys.env.get("SPARK_GRAFT_ZEROCOPY").contains("1")
     def run(threads: Int): Double = {
       val t0 = System.nanoTime()
       val chunk = (pages.length + threads - 1) / threads
@@ -36,8 +33,7 @@ object ThreadBench {
           val end = math.min(pages.length, i + chunk)
           var acc = 0L
           while (i < end) {
-            val s = if (zeroCopy) Extractor.extractMainCodegenView(pages(i))
-              else Extractor.extractMainCodegen(pages(i))
+            val s = Extractor.extractMainCodegen(pages(i))
             if (s != null) acc += s.numBytes()
             i += 1
           }
@@ -52,7 +48,7 @@ object ThreadBench {
     for (k <- Seq(1, 2, 4, 8, 16, 32)) {
       val s1 = run(k); val s2 = run(k)
       val sec = math.min(s1, s2)
-      println(f"threads=$k%2d sec=$sec%.2f MBps=${bytes / sec / 1e6}%.0f zerocopy=$zeroCopy")
+      println(f"threads=$k%2d sec=$sec%.2f MBps=${bytes / sec / 1e6}%.0f")
     }
   }
 }

@@ -212,10 +212,15 @@ private[spark] trait AnnIndexOps extends AnnCoreOps {
     // delete a superseded radii batch file mid-read; the compacted batch's
     // tight radii landed first and max-merge keeps correctness, same
     // argument as the lsh/ivf probe scans
-    spark.read.option("ignoreMissingFiles", "true").parquet(s"$indexDir/radii")
-      // coalesce: tolerate a radii partition without cnt (defense in
-      // depth — the v5 version gate should make it unreachable); a 0
-      // count only shrinks the advisory bound, never breaks exactness
+    val radiiDf = spark.read.option("ignoreMissingFiles", "true").parquet(s"$indexDir/radii")
+    // a radii table with no cnt column at all is a pre-v5 index: fail
+    // with appendAnnIndex's rebuild error, not an unresolved column
+    require(radiiDf.columns.contains("cnt"),
+      s"index at $indexDir predates v$AnnIndexVersion — rebuild before probing")
+    radiiDf
+      // coalesce: a radii batch file without cnt inside a table whose
+      // schema has it reads cnt as null; a 0 count only shrinks the
+      // advisory bound, never breaks exactness
       .select(col("list_id").as[Int], col("radius").as[Double],
         coalesce(col("cnt"), lit(0L)).as[Long])
       .collect().foreach { case (l, r, c) =>

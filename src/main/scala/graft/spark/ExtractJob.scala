@@ -4,7 +4,6 @@ import org.apache.spark.sql.{DataFrame, Dataset, Encoders, SaveMode, SparkSessio
 import org.apache.spark.util.AccumulatorV2
 import org.apache.spark.sql.functions._
 import java.sql.Timestamp
-import scala.util.control.NonFatal
 
 final case class ExtractedRow(
     bucket: Int,
@@ -118,8 +117,13 @@ private[spark] final class LineageAccumulator(buckets: Int)
   *    read-back instead: a replayed micro-batch would count twice.)
   *  - **per-row engine, zero per-row allocation churn**: `mapPartitions`
   *    with the thread-local arena in [[Extractor]]. Every per-row failure
-  *    (parse error, pathological input, null timestamp) yields a null-text
-  *    row counted in `failure_count` — never a task failure.
+  *    (parse error, pathological input, a stack overflow on a deep page,
+  *    null timestamp) yields a null-text row counted in `failure_count` —
+  *    never a task failure ([[Extractor.extractMainOrNull]]).
+  *  - **local output**: both writes carry [[NioLocalFileSystem.WriteOptions]],
+  *    so on `file:` paths permissions are set in-process instead of by one
+  *    forked `chmod` per created file and directory; other schemes ignore
+  *    the options.
   *
   * At 100 TB the only wide exchange is the single hash repartition; the
   * extraction itself is embarrassingly parallel map work.
@@ -164,12 +168,17 @@ object ExtractJob {
   def bucketCol(salt: Int, buckets: Int) =
     pmod(hash(col("url"), lit(salt)), lit(buckets))
 
-  private val lineageSchema = Encoders.product[LineageRow].schema
+  // encoders derived once per JVM: reflective derivation costs tens of ms
+  // of serial driver time, which `run` would otherwise pay per call
+  private val pageEnc = Encoders.product[(Int, String, Timestamp, Array[Byte])]
+  private val rowEnc = Encoders.product[ExtractedRow]
+  private val resumeEnc = Encoders.product[(Int, String, Option[Int], Option[Int])]
+  private val lineageEnc = Encoders.product[LineageRow]
+  private val lineageSchema = lineageEnc.schema
 
   /** run extraction over a pages dataframe, writing extracted + lineage
     * tables under outDir; resumes from lineage when present. */
   def run(spark: SparkSession, pages: DataFrame, outDir: String, cfg: Config = Config()): Unit = {
-    import spark.implicits._
     val lineagePath = s"$outDir/lineage"
     val extractedPath = s"$outDir/extracted"
 
@@ -180,7 +189,7 @@ object ExtractJob {
         // config columns existed reads them as null (accepted as-is)
         val recs = spark.read.schema(lineageSchema).parquet(lineagePath)
           .select(col("partition_id"), col("status"), col("buckets"), col("salt"))
-          .as[(Int, String, Option[Int], Option[Int])].collect()
+          .as(resumeEnc).collect()
         // resume-config guard: lineage partition ids are only meaningful
         // under the bucketing that produced them — resuming with a
         // different buckets/salt would subtract stale ids from a REMAPPED
@@ -215,13 +224,11 @@ object ExtractJob {
       else pending.repartition(col("bucket"))
     val extracted: Dataset[ExtractedRow] = shuffled
       .select(col("bucket"), col("url"), col("warc_ts"), col("html"))
-      .as[(Int, String, Timestamp, Array[Byte])]
+      .as(pageEnc)
       .mapPartitions { it =>
         it.map { case (b, url, ts, html) =>
           val bytes = if (html == null) 0L else html.length.toLong
-          val raw =
-            try Extractor.extractMain(html, recipe)
-            catch { case NonFatal(_) => null }
+          val raw = Extractor.extractMainOrNull(html, recipe)
           val text =
             if (raw == null || !doClean) raw
             else TextNorm.scrubPii(TextNorm.fixText(raw))
@@ -229,13 +236,14 @@ object ExtractJob {
           lineage.add(row)
           row
         }
-      }
+      }(rowEnc)
 
     // idempotent per-bucket overwrite => exactly-once on resume; a zero-row
     // write touches no partition. parquet.block.size bounds row groups so
     // each bucket file stays splittable (see Config.rowGroupBytes)
     extracted.toDF()
       .write
+      .options(NioLocalFileSystem.WriteOptions)
       .partitionBy("bucket")
       .option("partitionOverwriteMode", "dynamic")
       .option("parquet.block.size", cfg.rowGroupBytes)
@@ -249,7 +257,9 @@ object ExtractJob {
         "done", cfg.runId, cfg.buckets, cfg.salt)
     }.toSeq
     if (rows.nonEmpty)
-      rows.toDS().coalesce(1).write.mode(SaveMode.Append).parquet(lineagePath)
+      spark.createDataset(rows)(lineageEnc).coalesce(1).write
+        .options(NioLocalFileSystem.WriteOptions)
+        .mode(SaveMode.Append).parquet(lineagePath)
   }
 
   /** spark-submit entry:

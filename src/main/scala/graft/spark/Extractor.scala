@@ -381,19 +381,17 @@ object Extractor extends Serializable {
     } else b
   }
 
-  /** hot path: bytes in, UTF-8 bytes out — no UTF-16 String round trip.
-    * Defensive: ANY per-row failure (parse error, pathological input) yields
-    * null — a lineage `failure_count` increment, never a task failure. */
-  def extractMainCodegen(html: Array[Byte]): org.apache.spark.unsafe.types.UTF8String = {
+  /** The one guarded main-content entry: parse (compat or crawl profile),
+    * strip the recipe's boilerplate, pick its main candidate, and hand
+    * both to `emit`. Defensive: ANY per-row failure (parse error,
+    * pathological input) yields null — a lineage `failure_count`
+    * increment, never a task failure. */
+  private def guardedMain[T >: Null](html: Array[Byte], recipe: Recipe, crawl: Boolean,
+      emit: (VDoc, Elems) => T): T = {
     if (html == null) return null
     try {
-      val doc = parseBytes(html)
-      if (doc == null) return null
-      val main = selectMain(doc, Recipe.default)
-      val ub = outBuilder()
-      ub.reset()
-      main.ids.foreach(e => doc.arena.textContentUtf8(e, ub))
-      org.apache.spark.unsafe.types.UTF8String.fromBytes(ub.toBytes)
+      val doc = if (crawl) parseBytesCrawl(html) else parseBytes(html)
+      if (doc == null) null else emit(doc, selectMain(doc, recipe))
     } catch {
       case scala.util.control.NonFatal(_) => null
       // belt over the parser's maxDepth=2048 cap: should a recursive walk
@@ -404,31 +402,24 @@ object Extractor extends Serializable {
     }
   }
 
-  /** zero-copy variant of [[extractMainCodegen]]: wraps the thread-local
-    * builder slab directly (`UTF8String.fromBytes(buf, 0, len)`) instead of
-    * copying it out. The result is valid ONLY until this thread's next
-    * extraction resets the slab — safe for consumers that materialize
-    * immediately (UnsafeRowWriter projections copy the bytes into the row
-    * buffer before the next expression evaluates), UNSAFE for
-    * reference-retaining consumers (TypedImperativeAggregate results like
-    * collect_list hold expression outputs across rows). Measurement entry
-    * for the output-copy lever (BASELINE.md) — the shipped expressions use
-    * the copying path unless the measured win justifies the hazard. */
-  def extractMainCodegenView(html: Array[Byte]): org.apache.spark.unsafe.types.UTF8String = {
-    if (html == null) return null
-    try {
-      val doc = parseBytes(html)
-      if (doc == null) return null
-      val main = selectMain(doc, Recipe.default)
-      val ub = outBuilder()
-      ub.reset()
-      main.ids.foreach(e => doc.arena.textContentUtf8(e, ub))
-      org.apache.spark.unsafe.types.UTF8String.fromBytes(ub.buf, 0, ub.len)
-    } catch {
-      case scala.util.control.NonFatal(_) => null
-      case _: StackOverflowError => null // row degrades, task survives (see first belt note)
-    }
+  // the two output forms, as values: no per-row closure allocation
+  private val mainText: (VDoc, Elems) => String = (_, main) => main.text()
+  private val mainUtf8: (VDoc, Elems) => org.apache.spark.unsafe.types.UTF8String = (doc, main) => {
+    val ub = outBuilder()
+    ub.reset()
+    main.ids.foreach(e => doc.arena.textContentUtf8(e, ub))
+    org.apache.spark.unsafe.types.UTF8String.fromBytes(ub.toBytes)
   }
+
+  /** [[extractMain]] behind the same row guard as [[extractMainCodegen]]:
+    * null on ANY per-row failure, a stack overflow included. The row path
+    * of [[ExtractJob]]. */
+  def extractMainOrNull(html: Array[Byte], recipe: Recipe): String =
+    guardedMain(html, recipe, crawl = false, mainText)
+
+  /** hot path: bytes in, UTF-8 bytes out — no UTF-16 String round trip. */
+  def extractMainCodegen(html: Array[Byte]): org.apache.spark.unsafe.types.UTF8String =
+    guardedMain(html, Recipe.default, crawl = false, mainUtf8)
 
   /** STRING entries delegate to the byte-native paths via the UTF8String's
     * underlying UTF-8 bytes: no UTF-16 round trip of the page, and STRING
@@ -442,21 +433,8 @@ object Extractor extends Serializable {
     * `body` gives the recipe's `body` candidate something to match, so
     * extraction returns main content instead of falling back to the whole
     * root (titles and all). Defensive null-on-failure like every entry. */
-  def extractMainCrawlCodegen(html: Array[Byte]): org.apache.spark.unsafe.types.UTF8String = {
-    if (html == null) return null
-    try {
-      val doc = parseBytesCrawl(html)
-      if (doc == null) return null
-      val main = selectMain(doc, Recipe.default)
-      val ub = outBuilder()
-      ub.reset()
-      main.ids.foreach(e => doc.arena.textContentUtf8(e, ub))
-      org.apache.spark.unsafe.types.UTF8String.fromBytes(ub.toBytes)
-    } catch {
-      case scala.util.control.NonFatal(_) => null
-      case _: StackOverflowError => null // row degrades, task survives (see first belt note)
-    }
-  }
+  def extractMainCrawlCodegen(html: Array[Byte]): org.apache.spark.unsafe.types.UTF8String =
+    guardedMain(html, Recipe.default, crawl = true, mainUtf8)
 
   def extractMainCrawlCodegenStr(html: org.apache.spark.unsafe.types.UTF8String): org.apache.spark.unsafe.types.UTF8String =
     if (html == null) null else extractMainCrawlCodegen(html.getBytes)

@@ -246,6 +246,11 @@ class RoundSevenOptSpec extends AnyFunSuite with BeforeAndAfterAll {
       rewrite("meta", Nil)(_.withColumn("version", lit(4)))
       rewrite("radii", Seq("batch"))(_.drop("cnt"))
       assert(!spark.read.parquet(s"$v4/radii").columns.contains("cnt"))
+      val sf = s"$base/sf"
+      emb.write.parquet(s"$sf/embeddings.parquet")
+      // probing the v4 shape fails loudly with the rebuild error
+      val err = intercept[IllegalArgumentException](TextOps.annIvfIndexed(spark, sf, v4, 0L, 5))
+      assert(err.getMessage.contains("predates v5"), err.getMessage)
 
       // the distributed path is the one that localCheckpoints the vectors
       // (stage names are the action's call site)
@@ -269,8 +274,6 @@ class RoundSevenOptSpec extends AnyFunSuite with BeforeAndAfterAll {
       assert(!fastSites.exists(_.startsWith("localCheckpoint")),
         s"a small v5 index compacts on the driver path: $fastSites")
 
-      val sf = s"$base/sf"
-      emb.write.parquet(s"$sf/embeddings.parquet")
       for (q <- Seq(0L, 7L, 123L)) {
         def lsh(dir: String) = TextOps.annLshIndexed(spark, sf, dir, q, 5, radius = 2)
           .collect().map(_.getLong(1)).toSeq
