@@ -271,21 +271,59 @@ final class Arena(initialNodes: Int = 256) {
       true
     } else {
       // non-ASCII selector ident (the parser accepts them, matching the
-      // reference's to_ascii_lowercase semantics): compare the span's
-      // UTF-8 bytes against `lower`'s UTF-8 bytes with ASCII-only folding
-      // — a char-length/byte-truncating compare could never match
-      val lb = lower.getBytes(java.nio.charset.StandardCharsets.UTF_8)
-      if (len != lb.length) return false
+      // reference's to_ascii_lowercase semantics): compare UTF-8 bytes —
+      // a char-length/byte-truncating compare could never match
+      spanEqIgnoreCase(off, len, lower.getBytes(java.nio.charset.StandardCharsets.UTF_8))
+    }
+  }
+
+  /** the span, ASCII-folded to lower case, equals the UTF-8 bytes `lower`
+    * (pre-encoded selector operands: no per-call scan of a String). */
+  def spanEqIgnoreCase(off: Int, len: Int, lower: Array[Byte]): Boolean = {
+    if (len != lower.length) return false
+    var i = 0
+    while (i < len) {
+      if (foldAscii(buf(off + i)) != lower(i)) return false
+      i += 1
+    }
+    true
+  }
+
+  /** `lowerName(x) == lowerName(y)` for two elements, read from the name
+    * spans with ASCII folding. Names that are not both well-formed UTF-8
+    * compare as decoded Strings: the decoder maps distinct malformed
+    * sequences (and a literal U+FFFD) to the same replacement char. */
+  def sameLowerName(x: Int, y: Int): Boolean = {
+    val xo = nameOff(x); val xl = nameLen(x)
+    val yo = nameOff(y); val yl = nameLen(y)
+    if (Utf8.wellFormed(buf, xo, xl) && Utf8.wellFormed(buf, yo, yl)) {
+      if (xl != yl) return false
       var i = 0
-      while (i < len) {
-        val c = buf(off + i)
-        val lc = if (c >= 'A' && c <= 'Z') (c + 32).toByte else c
-        if (lc != lb(i)) return false
+      while (i < xl) {
+        if (foldAscii(buf(xo + i)) != foldAscii(buf(yo + i))) return false
         i += 1
       }
       true
-    }
+    } else lowerName(x) == lowerName(y)
   }
+
+  /** hash of the UTF-8 bytes of `lowerName(x)`, consistent with
+    * [[sameLowerName]]; read from the span unless it is malformed. */
+  def lowerNameHash(x: Int): Int = {
+    val off = nameOff(x); val len = nameLen(x)
+    var h = 1
+    if (Utf8.wellFormed(buf, off, len)) {
+      var i = 0
+      while (i < len) { h = 31 * h + foldAscii(buf(off + i)); i += 1 }
+    } else {
+      val b = lowerName(x).getBytes(java.nio.charset.StandardCharsets.UTF_8)
+      var i = 0
+      while (i < b.length) { h = 31 * h + b(i); i += 1 }
+    }
+    h
+  }
+
+  @inline private def foldAscii(c: Byte): Byte = if (c >= 'A' && c <= 'Z') (c + 32).toByte else c
 
   /** lowercase tag name of an element ("" for non-elements / root);
     * ASCII fold (reference to_ascii_lowercase semantics). */
@@ -346,6 +384,16 @@ final class Arena(initialNodes: Int = 256) {
     -1
   }
 
+  /** [[findAttr]] with the key pre-encoded as UTF-8. */
+  def findAttr(ele: Int, lowerKey: Array[Byte]): Int = {
+    var a = attrHead(ele)
+    while (a >= 0) {
+      if (!aRemoved(a) && spanEqIgnoreCase(aKeyOff(a), aKeyLen(a), lowerKey)) return a
+      a = aNext(a)
+    }
+    -1
+  }
+
   def hasAttr(ele: Int, lowerKey: String): Boolean = findAttr(ele, lowerKey) >= 0
 
   /** attr value or null when absent; "" for boolean attrs is distinguished
@@ -391,10 +439,40 @@ final class Arena(initialNodes: Int = 256) {
   def detach(c: Int): Unit = {
     val p = parent(c)
     if (p < 0) return
+    val nx = nextSib(c)
+    unlink(c)
+    if (nx >= 0) renumberFrom(nx, nodeIdx(c))
+  }
+
+  /** detach every node of `ids` that has a parent, renumbering each touched
+    * parent's children once: k single detaches from one parent would each
+    * renumber all following siblings, O(k·n). */
+  def detachAll(ids: Array[Int]): Unit = {
+    val parents = new Array[Int](ids.length)
+    var np = 0
+    var i = 0
+    while (i < ids.length) {
+      val c = ids(i)
+      val p = parent(c)
+      if (p >= 0) { unlink(c); parents(np) = p; np += 1 }
+      i += 1
+    }
+    java.util.Arrays.sort(parents, 0, np)
+    i = 0
+    while (i < np) {
+      val p = parents(i)
+      if ((i == 0 || parents(i - 1) != p) && firstChild(p) >= 0) renumberFrom(firstChild(p), 0)
+      i += 1
+    }
+  }
+
+  /** unlink `c` from its parent's child list; nodeIdx of the following
+    * siblings is left for the caller to renumber. */
+  private def unlink(c: Int): Unit = {
+    val p = parent(c)
     val pr = prevSib(c); val nx = nextSib(c)
     if (pr >= 0) nextSib(pr) = nx else firstChild(p) = nx
     if (nx >= 0) prevSib(nx) = pr else lastChild(p) = pr
-    if (nx >= 0) renumberFrom(nx, nodeIdx(c))
     parent(c) = -1; prevSib(c) = -1; nextSib(c) = -1
     // the removed subtree may hold the cached holder of a duplicate id:
     // the cache must rebuild from the LIVE tree, or #id lookups return
@@ -572,33 +650,59 @@ final class Arena(initialNodes: Int = 256) {
   /** text extraction straight to UTF-8 bytes — entity-free runs are pure
     * memcpy now that spans are bytes (same traversal rules as textContent —
     * kept in lockstep, see PropertySpec cross-check). */
-  def textContentUtf8(id: Int, out: Utf8Builder): Unit = kind(id) match {
-    case TEXT | SPACES =>
-      Entities.decodeToUtf8(buf, textOff(id), textOff(id) + textLen(id), out)
-    case CDATA => out.appendBytes(buf, textOff(id), textLen(id))
-    case COMMENT => out.appendBytes(buf, textOff(id), textLen(id))
+  def textContentUtf8(id: Int, out: Utf8Builder): Unit = textUtf8(id, out, check = false)
+
+  /** [[textContentUtf8]] that stops and returns false at the first run
+    * (text node, CDATA or content-tag span) that is not well-formed UTF-8
+    * on its own. When it returns true, `out` holds exactly the UTF-8
+    * encoding of `text(id)`; `textContent` decodes run by run, so a lead
+    * byte ending one node and continuation bytes starting the next decode
+    * to U+FFFDs there, and must not be judged as one joined character. */
+  def textContentUtf8Checked(id: Int, out: Utf8Builder): Boolean = textUtf8(id, out, check = true)
+
+  private def textUtf8(id: Int, out: Utf8Builder, check: Boolean): Boolean = kind(id) match {
+    case TEXT | SPACES => textRunUtf8(id, out, check)
+    case CDATA | COMMENT => spanUtf8(id, out, check)
     case ELEM if isContentTag(id) =>
-      out.appendBytes(buf, textOff(id), textLen(id))
+      if (!spanUtf8(id, out, check)) return false
       var c = firstChild(id)
       while (c >= 0) {
-        if (isTextKind(c)) Entities.decodeToUtf8(buf, textOff(c), textOff(c) + textLen(c), out)
+        if (isTextKind(c) && !textRunUtf8(c, out, check)) return false
         c = nextSib(c)
       }
+      true
     case ELEM | ROOT =>
       var c = firstChild(id)
       while (c >= 0) {
-        kind(c) match {
-          case TEXT | SPACES =>
-            Entities.decodeToUtf8(buf, textOff(c), textOff(c) + textLen(c), out)
-          case CDATA => out.appendBytes(buf, textOff(c), textLen(c))
+        val ok = kind(c) match {
+          case TEXT | SPACES => textRunUtf8(c, out, check)
+          case CDATA => spanUtf8(c, out, check)
           case ELEM =>
-            if (isContentTag(c)) out.appendBytes(buf, textOff(c), textLen(c))
-            else textContentUtf8(c, out)
-          case _ => ()
+            if (isContentTag(c)) spanUtf8(c, out, check)
+            else textUtf8(c, out, check)
+          case _ => true
         }
+        if (!ok) return false
         c = nextSib(c)
       }
-    case _ => ()
+      true
+    case _ => true
+  }
+
+  // a text run's raw span is well-formed exactly when each entity-split
+  // sub-run is: the splits fall on ASCII bytes, which no sequence spans
+  @inline private def textRunUtf8(id: Int, out: Utf8Builder, check: Boolean): Boolean = {
+    val off = textOff(id); val len = textLen(id)
+    if (check && !Utf8.wellFormed(buf, off, len)) return false
+    Entities.decodeToUtf8(buf, off, off + len, out)
+    true
+  }
+
+  @inline private def spanUtf8(id: Int, out: Utf8Builder, check: Boolean): Boolean = {
+    val off = textOff(id); val len = textLen(id)
+    if (check && !Utf8.wellFormed(buf, off, len)) return false
+    out.appendBytes(buf, off, len)
+    true
   }
 
   /** raw characters without entity decoding (reference text_chars,

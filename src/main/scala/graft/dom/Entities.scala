@@ -905,11 +905,11 @@ object Entities {
   def decodeToUtf8(s: Array[Byte], from: Int, until: Int, out: Utf8Builder): Unit = {
     var i = from
     var runStart = from
-    val tmp = new java.lang.StringBuilder(8)
+    var tmp: java.lang.StringBuilder = null // most text runs hold no '&'
     while (i < until) {
       if (s(i) == '&') {
         if (i > runStart) out.appendBytes(s, runStart, i - runStart)
-        tmp.setLength(0)
+        if (tmp == null) tmp = new java.lang.StringBuilder(8) else tmp.setLength(0)
         val end = decodeOne(s, i, until, tmp)
         if (end > i) {
           var k = 0

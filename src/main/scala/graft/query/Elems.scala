@@ -520,8 +520,9 @@ final class Elems(var doc: VDoc, var ids: Array[Int]) {
 
   // ================= mutation =================
 
+  /** detach every element, then renumber each touched parent once. */
   def remove(): Elems = {
-    ids.foreach { e => if (a.parent(e) >= 0) a.detach(e) }
+    a.detachAll(ids)
     this
   }
 
@@ -584,9 +585,13 @@ final class Texts(val doc: VDoc, var ids: Array[Int]) {
     new Texts(doc, out.toArray)
   }
 
-  def remove(): Unit = ids.foreach { e =>
-    if (a.kind(e) == a.TEXT || a.kind(e) == a.SPACES) a.detach(e)
-    else if (a.kind(e) == a.ELEM && a.isContentTag(e)) { a.textOff(e) = 0; a.textLen(e) = 0 }
+  /** detach the text nodes (renumbering each touched parent once) and
+    * clear the content tags posing as text. */
+  def remove(): Unit = {
+    ids.foreach { e =>
+      if (a.kind(e) == a.ELEM && a.isContentTag(e)) { a.textOff(e) = 0; a.textLen(e) = 0 }
+    }
+    a.detachAll(ids.filter(e => a.kind(e) == a.TEXT || a.kind(e) == a.SPACES))
   }
 
   def get(i: Int): TextHandle = new TextHandle(doc, ids(i))

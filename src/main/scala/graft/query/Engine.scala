@@ -1,6 +1,6 @@
 package graft.query
 
-import graft.dom.Arena
+import graft.dom.{Arena, Utf8, Utf8Builder}
 import graft.selector._
 import scala.collection.mutable.ArrayBuffer
 
@@ -270,23 +270,51 @@ object Engine {
     false
   }
 
+  private val ClassKey: Array[Byte] = "class".getBytes(java.nio.charset.StandardCharsets.UTF_8)
+  private val HtmlName: Array[Byte] = "html".getBytes(java.nio.charset.StandardCharsets.UTF_8)
+  /** ASCII bytes `Character.isWhitespace` accepts: the class-list split */
+  private val ClassSeps = Utf8.separators('\t', '\n', '\u000b', '\f', '\r',
+    '\u001c', '\u001d', '\u001e', '\u001f', ' ')
+  /** the `~=` word-list split (reference rules/attr.rs) */
+  private val WordSeps = Utf8.separators(' ', '\t', '\n', '\r', '\f')
+
+  /** per-thread scratch for `:contains` text; reused across candidates */
+  private val containsText = new ThreadLocal[Utf8Builder] {
+    override def initialValue(): Utf8Builder = new Utf8Builder(1 << 12)
+  }
+
   def isPositional(s: Simple): Boolean = s match {
     case _: Simple.Nth | Simple.OnlyChild | Simple.OnlyOfType => true
     case _ => false
   }
 
-  /** per-element predicate for non-positional simples. */
-  def matchOne(doc: VDoc, e: Int, s: Simple): Boolean = {
+  /** Per-element predicate for non-positional simples — the one entry for
+    * `find`, `filter`/`not`/`has` and the fused walks of `Extractor`. Tag,
+    * class, attribute and `:contains` rules read the arena's UTF-8 spans
+    * against the rule's pre-encoded [[Operand]], and fall back to decoding
+    * the span and running the String predicate when bytes cannot decide
+    * exactly: a `class` value with a non-ASCII byte, an attribute value
+    * that is not well-formed UTF-8, an operand that is not exact (unpaired
+    * surrogate or U+FFFD), or `:contains` text with a run malformed on its
+    * own. Results equal the String predicates for every input. */
+  def matchOne(doc: VDoc, e: Int, s: Simple): Boolean = s match {
+    case t: Simple.Tag =>
+      val a = doc.arena
+      a.kind(e) == a.ELEM && a.spanEqIgnoreCase(a.nameOff(e), a.nameLen(e), t.utf8)
+    case c: Simple.Cls =>
+      val a = doc.arena
+      a.kind(e) == a.ELEM && matchClass(a, e, c.operand)
+    case at: Simple.Attr => matchAttr(doc.arena, e, at)
+    case c: Simple.Contains => matchContains(doc.arena, e, c.operand)
+    case _ => matchStructural(doc, e, s)
+  }
+
+  // the rules that read no operand span, kept out of matchOne so that the
+  // per-element entry stays small enough for the JIT to inline in walks
+  private def matchStructural(doc: VDoc, e: Int, s: Simple): Boolean = {
     val a = doc.arena
     s match {
       case Simple.All => true
-      case Simple.Tag(t) =>
-        a.kind(e) == a.ELEM && a.spanEqIgnoreCase(a.nameOff(e), a.nameLen(e), t)
-      case Simple.Cls(c) =>
-        a.kind(e) == a.ELEM && {
-          val v = a.attrValue(e, "class")
-          v != null && classListContains(v, c)
-        }
       case Simple.Id(v) =>
         // reference parity (id.rs:8-52): #id means THE document's
         // get_element_by_id element (first in doc order) in every context
@@ -294,11 +322,8 @@ object Engine {
         // DUPLICATE id must not match, so the identity check goes through
         // the id cache, not the attribute.
         a.kind(e) == a.ELEM && a.getElementById(v) == e
-      case Simple.Attr(k, op, v) => matchAttr(a, e, k, op, v)
-      case Simple.Contains(search) =>
-        search.isEmpty || a.text(e).contains(search)
       case Simple.Root =>
-        a.kind(e) == a.ELEM && a.spanEqIgnoreCase(a.nameOff(e), a.nameLen(e), "html") &&
+        a.kind(e) == a.ELEM && a.spanEqIgnoreCase(a.nameOff(e), a.nameLen(e), HtmlName) &&
           a.parent(e) == 0 && a.isDocument
       case Simple.Empty =>
         // no child nodes, or only comments (reference pseudo.rs:69-99)
@@ -317,18 +342,49 @@ object Engine {
     }
   }
 
+  /** `.name`: some whitespace-separated token of the `class` value equals
+    * the name — a token scan of the span when it is ASCII. */
+  private def matchClass(a: Arena, e: Int, name: Operand): Boolean = {
+    val ai = a.findAttr(e, ClassKey)
+    if (ai < 0 || a.aValOff(ai) < 0) return false // absent, or boolean: no tokens
+    val off = a.aValOff(ai)
+    val len = a.aValLen(ai)
+    if (!name.exact || !Utf8.isAscii(a.buf, off, len)) classListContains(a.str(off, len), name.str)
+    else name.ascii && Utf8.hasToken(a.buf, off, len, name.utf8, ClassSeps)
+  }
+
   /** attribute operator semantics, exactly as reference rules/attr.rs:23-84
-    * including the empty-value and missing-attribute edge cases. */
-  private def matchAttr(a: Arena, e: Int, key: String, op: Char, value: String): Boolean = {
+    * including the empty-value and missing-attribute edge cases; a
+    * well-formed value span compares as bytes. */
+  private def matchAttr(a: Arena, e: Int, s: Simple.Attr): Boolean = {
     if (a.kind(e) != a.ELEM) return false
-    val attrIdx = a.findAttr(e, key)
-    if (op == 0) return attrIdx >= 0
-    val isBool = attrIdx >= 0 && a.aValOff(attrIdx) < 0
-    val v: String =
-      if (attrIdx < 0 || isBool) null
-      else a.str(a.aValOff(attrIdx), a.aValLen(attrIdx))
+    val attrIdx = a.findAttr(e, s.keyUtf8)
+    if (s.op == 0) return attrIdx >= 0
+    val value = s.operand
     // empty attr value with ^ $ * ~ matches nothing
-    if (value.isEmpty && (op == '^' || op == '$' || op == '*' || op == '~')) return false
+    if (value.str.isEmpty && (s.op == '^' || s.op == '$' || s.op == '*' || s.op == '~')) return false
+    val off = if (attrIdx < 0) -1 else a.aValOff(attrIdx)
+    if (off < 0) return attrOp(null, s.op, value.str) // absent or boolean
+    val len = a.aValLen(attrIdx)
+    if (!value.exact || !Utf8.wellFormed(a.buf, off, len)) return attrOp(a.str(off, len), s.op, value.str)
+    val b = a.buf
+    val p = value.utf8
+    s.op match {
+      case '^' => Utf8.startsWith(b, off, len, p)
+      case '$' => Utf8.endsWith(b, off, len, p)
+      case '*' => Utf8.indexOf(b, off, len, p) >= 0
+      case '|' =>
+        Utf8.spanEquals(b, off, len, p) ||
+          (len > p.length && Utf8.startsWith(b, off, len, p) && b(off + p.length) == '-')
+      case '~' => Utf8.hasToken(b, off, len, p, WordSeps)
+      case '!' => !Utf8.spanEquals(b, off, len, p)
+      case '=' => Utf8.spanEquals(b, off, len, p)
+      case _ => false
+    }
+  }
+
+  /** the attribute operators on a decoded value (null: absent or boolean). */
+  private def attrOp(v: String, op: Char, value: String): Boolean = {
     op match {
       case '^' => v != null && v.startsWith(value)
       case '$' => v != null && v.endsWith(value)
@@ -336,14 +392,25 @@ object Engine {
       case '|' =>
         if (v == null) value.isEmpty
         else v == value || v.startsWith(value + "-")
-      case '~' =>
-        v != null && v.split(Array(' ', '\t', '\n', '\r', '\f')).exists(x => x.nonEmpty && x == value)
+      case '~' => v != null && Utf8.hasToken(v, value, WordSeps)
       case '!' =>
         if (v == null) value.nonEmpty else v != value
       case '=' =>
         if (v == null) value.isEmpty else v == value
       case _ => false
     }
+  }
+
+  /** `:contains`: a byte search over the element's UTF-8 text, unless the
+    * operand is not exact or some text run is malformed on its own. */
+  private def matchContains(a: Arena, e: Int, search: Operand): Boolean = {
+    if (search.str.isEmpty) return true
+    if (search.exact) {
+      val out = containsText.get()
+      out.reset()
+      if (a.textContentUtf8Checked(e, out)) return Utf8.indexOf(out.buf, 0, out.len, search.utf8) >= 0
+    }
+    a.text(e).contains(search.str)
   }
 
   /** :checked (reference rules/pseudo.rs:918-1013). */
@@ -407,11 +474,10 @@ object Engine {
         ids.filter { e =>
           val p = a.parent(e)
           p >= 0 && {
-            val myName = a.lowerName(e)
             var c = a.firstChild(p)
             var dup = false
             while (c >= 0 && !dup) {
-              if (c != e && a.kind(c) == a.ELEM && a.lowerName(c) == myName) dup = true
+              if (c != e && a.kind(c) == a.ELEM && a.sameLowerName(c, e)) dup = true
               c = a.nextSib(c)
             }
             !dup
@@ -483,38 +549,51 @@ object Engine {
   }
 
   /** of-type rank matching: rank = position among same-tag-name siblings
-    * (reference get_allowed_name_ele, pseudo.rs:444-469). */
+    * (reference get_allowed_name_ele, pseudo.rs:444-469). Names group
+    * through an open-addressing table of name-span hashes; ranks are int
+    * arrays parallel to `childs`. */
   private def matchNthOfType(a: Arena, childs: ArrayBuffer[Int], candidates: ArrayBuffer[Int],
       allow: Array[Int], last: Boolean, out: ArrayBuffer[Int]): Unit = {
-    val rank = new java.util.HashMap[Int, Int]() // child id -> of-type rank
-    val counter = new java.util.HashMap[String, Int]()
-    if (!last) {
-      var i = 0
-      while (i < childs.length) {
-        val c = childs(i)
-        val nm = a.lowerName(c)
-        val r = counter.getOrDefault(nm, 0)
-        rank.put(c, r)
-        counter.put(nm, r + 1)
-        i += 1
-      }
-    } else {
-      var i = childs.length - 1
-      while (i >= 0) {
-        val c = childs(i)
-        val nm = a.lowerName(c)
-        val r = counter.getOrDefault(nm, 0)
-        rank.put(c, r)
-        counter.put(nm, r + 1)
-        i -= 1
-      }
-    }
+    val total = childs.length
+    // typeOf(i): index of the first child whose lower-case name equals i's
+    val typeOf = new Array[Int](total)
+    val hashes = new Array[Int](total)
+    var cap = 2
+    while (cap < total * 2) cap <<= 1
+    val slots = new Array[Int](cap)
+    java.util.Arrays.fill(slots, -1)
     var i = 0
-    while (i < candidates.length) {
-      val c = candidates(i)
-      val r = rank.getOrDefault(c, -1)
-      if (r >= 0 && java.util.Arrays.binarySearch(allow, r) >= 0) out += c
+    while (i < total) {
+      val h = a.lowerNameHash(childs(i))
+      hashes(i) = h
+      var s = (h ^ (h >>> 16)) & (cap - 1)
+      while (slots(s) >= 0 && !(hashes(slots(s)) == h && a.sameLowerName(childs(slots(s)), childs(i))))
+        s = (s + 1) & (cap - 1)
+      if (slots(s) < 0) slots(s) = i
+      typeOf(i) = slots(s)
       i += 1
+    }
+    val counter = new Array[Int](total) // per type representative
+    val rank = new Array[Int](total)
+    i = if (last) total - 1 else 0
+    while (i >= 0 && i < total) {
+      rank(i) = counter(typeOf(i))
+      counter(typeOf(i)) += 1
+      i += (if (last) -1 else 1)
+    }
+    // candidates follow childs' order, so one forward pointer finds each;
+    // it wraps around once for a candidate out of that order
+    var pos = 0
+    var k = 0
+    while (k < candidates.length) {
+      val c = candidates(k)
+      var probe = 0
+      while (probe < total && childs(pos) != c) { pos = if (pos + 1 == total) 0 else pos + 1; probe += 1 }
+      if (probe < total) {
+        if (java.util.Arrays.binarySearch(allow, rank(pos)) >= 0) out += c
+        pos = if (pos + 1 == total) 0 else pos + 1
+      }
+      k += 1
     }
   }
 

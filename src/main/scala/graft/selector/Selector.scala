@@ -27,7 +27,47 @@ object Combinator extends Enumeration {
   }
 }
 
-/** one simple selector rule with its matcher priority */
+/** A selector string operand, encoded once when the selector compiles:
+  * its UTF-8 bytes, whether it is pure ASCII, and whether byte comparisons
+  * decide String predicates on it exactly. They do unless the operand holds
+  * an unpaired surrogate (its encoding is `?`, and the String could still
+  * match half of a surrogate pair) or U+FFFD (the replacement a malformed
+  * span decodes to); such operands always take the String path. */
+final class Operand(val str: String) {
+  val utf8: Array[Byte] = str.getBytes(java.nio.charset.StandardCharsets.UTF_8)
+  val ascii: Boolean = str.forall(_ < 0x80)
+  val exact: Boolean = ascii || {
+    var ok = true
+    var i = 0
+    while (ok && i < str.length) {
+      val c = str.charAt(i)
+      if (c == '\uFFFD') ok = false
+      else if (Character.isHighSurrogate(c)) {
+        if (i + 1 < str.length && Character.isLowSurrogate(str.charAt(i + 1))) i += 1
+        else ok = false
+      } else if (Character.isLowSurrogate(c)) ok = false
+      i += 1
+    }
+    ok
+  }
+}
+
+/** One simple selector rule with its matcher priority. Tag, class,
+  * attribute and `:contains` rules carry their operands pre-encoded
+  * ([[Operand]], computed once per compiled selector), so the engine
+  * matches them on the arena's UTF-8 spans without building a String per
+  * candidate element. A case the bytes cannot decide exactly decodes the
+  * span and runs the String predicate instead:
+  *  - a `class` value with any non-ASCII byte (class lists split at
+  *    Unicode whitespace, `Character.isWhitespace`);
+  *  - an attribute value that is not well-formed UTF-8 (decoding maps it
+  *    to U+FFFD);
+  *  - an operand that is not [[Operand.exact]];
+  *  - for `:contains`, text with any run (one text node, CDATA or
+  *    content-tag span) that is malformed on its own: `text()` decodes
+  *    run by run, so bytes split across two nodes never join into one
+  *    character.
+  * The case-class fields (and so equality) stay the plain Strings. */
 sealed abstract class Simple(val priority: Int)
 object Simple {
   // priorities: reference src/mesdoc/constants.rs:11-16
@@ -38,11 +78,21 @@ object Simple {
   final val P_ID = 10000
 
   case object All extends Simple(P_ALL)
-  final case class Tag(lower: String) extends Simple(P_NAME)
-  final case class Cls(name: String) extends Simple(P_CLASS)
+  final case class Tag(lower: String) extends Simple(P_NAME) {
+    /** `lower` as UTF-8: name spans compare to it with ASCII folding */
+    val utf8: Array[Byte] = lower.getBytes(java.nio.charset.StandardCharsets.UTF_8)
+  }
+  final case class Cls(name: String) extends Simple(P_CLASS) {
+    val operand: Operand = new Operand(name)
+  }
   final case class Id(name: String) extends Simple(P_ID)
   /** op: 0=presence '='/'^'/'$'/'*'/'|'/'~'/'!' per reference rules/attr.rs */
-  final case class Attr(lowerKey: String, op: Char, value: String) extends Simple(P_PSEUDO)
+  final case class Attr(lowerKey: String, op: Char, value: String) extends Simple(P_PSEUDO) {
+    /** `lowerKey` as UTF-8: key spans compare to it with ASCII folding */
+    val keyUtf8: Array[Byte] = lowerKey.getBytes(java.nio.charset.StandardCharsets.UTF_8)
+    /** the value operand; null for a presence test */
+    val operand: Operand = if (value == null) null else new Operand(value)
+  }
   /** nth family. ofType=false => *-child; last=true => counting from end.
     * (n, idx) as in mesdoc Nth; hasN=false => constant index only. */
   final case class Nth(ofType: Boolean, last: Boolean, hasN: Boolean, n: Long, idx: Long)
@@ -52,7 +102,9 @@ object Simple {
   case object Root extends Simple(P_PSEUDO)
   case object Empty extends Simple(P_PSEUDO)
   case object Checked extends Simple(P_PSEUDO)
-  final case class Contains(search: String) extends Simple(P_PSEUDO)
+  final case class Contains(search: String) extends Simple(P_PSEUDO) {
+    val operand: Operand = new Operand(search)
+  }
   final case class Not(sel: Selector) extends Simple(P_PSEUDO)
   final case class Has(sel: Selector) extends Simple(P_PSEUDO)
   /** :header/:input/:submit — alias expansion (reference constants.rs:24-27) */
