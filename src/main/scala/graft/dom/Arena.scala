@@ -20,6 +20,18 @@ import scala.collection.mutable
   * case folding is ASCII-only, exactly like the reference's
   * `to_ascii_lowercase`. Parsing a crawl row is then a plain memcpy of the
   * raw bytes — no UTF-16 expansion on the hot path.
+  *
+  * The renderer (`outerHtml`, `innerHtml`, `sourceCode`, `textChars`)
+  * writes UTF-8 into a [[Utf8Builder]] and decodes the whole output once.
+  * Its result equals decoding every span on its own and joining the
+  * Strings: a well-formed span is copied as raw bytes; a span that is not
+  * is appended as its decoded String re-encoded (each malformed sequence
+  * becomes U+FFFD, `EF BF BD`). Bytes never join across spans, so a lead
+  * byte ending one text node and a continuation byte starting the next
+  * stay two U+FFFDs. Each piece is then well-formed, and one decode of the
+  * buffer equals the per-span decodes joined. Output that is decoded
+  * anyway (the String entries) needs no per-span check: see
+  * [[renderString]].
   */
 final class Arena(initialNodes: Int = 256) {
 
@@ -588,9 +600,9 @@ final class Arena(initialNodes: Int = 256) {
     idMap.getOrElse(idVal, -1)
   }
 
-  // ================= render =================
+  // ================= text =================
 
-  /** append the UTF-8 span [off, off+len) to a UTF-16 builder (cold paths). */
+  /** append the UTF-8 span [off, off+len) to a UTF-16 builder (`text()`). */
   def appendSpanTo(off: Int, len: Int, out: java.lang.StringBuilder): Unit = {
     // fast ASCII path; fall back to a decoded String for multi-byte runs
     var i = off
@@ -660,6 +672,16 @@ final class Arena(initialNodes: Int = 256) {
     * to U+FFFDs there, and must not be judged as one joined character. */
   def textContentUtf8Checked(id: Int, out: Utf8Builder): Boolean = textUtf8(id, out, check = true)
 
+  /** the UTF-8 encoding of `text(id)`: runs copied as bytes, or, when one
+    * of them is malformed on its own, the decoded text re-encoded. */
+  def textUtf8Exact(id: Int, out: Utf8Builder): Unit = {
+    val mark = out.len
+    if (!textContentUtf8Checked(id, out)) {
+      out.len = mark
+      out.appendString(text(id))
+    }
+  }
+
   private def textUtf8(id: Int, out: Utf8Builder, check: Boolean): Boolean = kind(id) match {
     case TEXT | SPACES => textRunUtf8(id, out, check)
     case CDATA | COMMENT => spanUtf8(id, out, check)
@@ -705,82 +727,114 @@ final class Arena(initialNodes: Int = 256) {
     true
   }
 
+  // ================= render =================
+
   /** raw characters without entity decoding (reference text_chars,
     * `src/lib.rs:240-245`; inner only for elements). */
   def textChars(id: Int): String = kind(id) match {
     case TEXT | SPACES | CDATA => str(textOff(id), textLen(id))
-    case ELEM | ROOT =>
-      val sb = new java.lang.StringBuilder(64)
-      renderInner(id, sb, encodeContent = false)
-      sb.toString
-    case COMMENT => "<!--" + str(textOff(id), textLen(id)) + "-->"
+    case ELEM | ROOT | COMMENT => renderString(textCharsTo(id, _, checked = false))
     case _ => ""
   }
 
-  /** render one node incl. its own markup. */
-  def renderNode(id: Int, out: java.lang.StringBuilder, encodeContent: Boolean): Unit = kind(id) match {
-    case TEXT | SPACES =>
-      if (encodeContent) encodeLtGt(textOff(id), textLen(id), out)
-      else appendSpanTo(textOff(id), textLen(id), out)
+  /** [[textChars]] of `id` appended to UTF-8 output. */
+  def textCharsTo(id: Int, out: Utf8Builder, checked: Boolean): Unit = kind(id) match {
+    case TEXT | SPACES | CDATA => appendSpan(textOff(id), textLen(id), out, checked)
+    case ELEM | ROOT => renderInner(id, out, encodeContent = false, checked)
     case COMMENT =>
-      out.append("<!--"); appendSpanTo(textOff(id), textLen(id), out); out.append("-->")
+      out.appendAscii("<!--"); appendSpan(textOff(id), textLen(id), out, checked); out.appendAscii("-->")
+    case _ => ()
+  }
+
+  /** the String that `render` writes unchecked (`checked = false`: spans
+    * copied raw unless they start on a continuation byte), decoded once.
+    * It equals the per-span decodes joined. Java's UTF-8 decoder replaces
+    * each maximal ill-formed subpart with one U+FFFD (Unicode §3.9), and a
+    * subpart never takes in a byte that cannot continue it. Every piece
+    * after a span starts on a byte that is not a continuation byte: ASCII
+    * markup, or a span, which is decoded on its own when it starts on
+    * one. So no subpart crosses a span's end, and each span decodes as it
+    * would alone. The buffer starts at `initial` bytes (a node's output
+    * can be any fraction of the document) and grows by doubling. */
+  def renderString(render: Utf8Builder => Unit, initial: Int = 64): String = {
+    val out = new Utf8Builder(initial)
+    render(out)
+    out.toUtf8String
+  }
+
+  /** append the span [off, off+len): raw bytes when well-formed, else its
+    * decoded String re-encoded. `checked = true` gives the exact bytes
+    * (class doc); unchecked, only a span that starts on a continuation
+    * byte (never well-formed) is checked, for output decoded as a whole
+    * ([[renderString]]). */
+  private def appendSpan(off: Int, len: Int, out: Utf8Builder, checked: Boolean): Unit =
+    if (len > 0 && (checked || (buf(off) & 0xc0) == 0x80) && !Utf8.wellFormed(buf, off, len))
+      out.appendString(str(off, len))
+    else out.appendBytes(buf, off, len)
+
+  /** render one node incl. its own markup. Attribute quotes are ASCII:
+    * the parser and `setAttr` store only `"` or `'`. */
+  def renderNode(id: Int, out: Utf8Builder, encodeContent: Boolean, checked: Boolean): Unit = kind(id) match {
+    case TEXT | SPACES =>
+      if (encodeContent) encodeLtGt(textOff(id), textLen(id), out, checked)
+      else appendSpan(textOff(id), textLen(id), out, checked)
+    case COMMENT =>
+      out.appendAscii("<!--"); appendSpan(textOff(id), textLen(id), out, checked); out.appendAscii("-->")
     case CDATA =>
-      out.append("<![CDATA["); appendSpanTo(textOff(id), textLen(id), out); out.append("]]>")
-    case DOCTYPE => appendSpanTo(textOff(id), textLen(id), out) // raw incl. <! >
-    case RAWSPAN => appendSpanTo(textOff(id), textLen(id), out) // stray close tag, verbatim
-    case ROOT => renderInner(id, out, encodeContent)
+      out.appendAscii("<![CDATA["); appendSpan(textOff(id), textLen(id), out, checked); out.appendAscii("]]>")
+    case DOCTYPE => appendSpan(textOff(id), textLen(id), out, checked) // raw incl. <! >
+    case RAWSPAN => appendSpan(textOff(id), textLen(id), out, checked) // stray close tag, verbatim
+    case ROOT => renderInner(id, out, encodeContent, checked)
     case ELEM if (flags(id) & F_IMPLIED) != 0 =>
       // an implied (parser-synthesized) element has no source OPEN tag:
       // render children only, so html5Tree-mode re-render stays
       // byte-identical to the input. A stray close tag in the source
       // (`</body>` with no explicit open — endTag matched the implied
       // element and set F_END_TAG) DID contribute bytes, so it renders.
-      renderInner(id, out, encodeContent)
-      if ((flags(id) & F_END_TAG) != 0) {
-        out.append('<').append('/')
-        appendSpanTo(nameOff(id), nameLen(id), out)
-        out.append('>')
-      }
+      renderInner(id, out, encodeContent, checked)
+      if ((flags(id) & F_END_TAG) != 0) renderEndTag(id, out, checked)
     case ELEM =>
-      out.append('<'); appendSpanTo(nameOff(id), nameLen(id), out)
+      out.appendByte('<'); appendSpan(nameOff(id), nameLen(id), out, checked)
       var a = attrHead(id)
       while (a >= 0) {
         if (!aRemoved(a)) {
-          out.append(' '); appendSpanTo(aKeyOff(a), aKeyLen(a), out)
+          out.appendByte(' '); appendSpan(aKeyOff(a), aKeyLen(a), out, checked)
           if (aValOff(a) >= 0) {
-            out.append('=')
-            val q = aQuote(a)
-            if (q != 0) out.append(q)
-            appendSpanTo(aValOff(a), aValLen(a), out)
-            if (q != 0) out.append(q)
+            out.appendByte('=')
+            val q = aQuote(a).toByte
+            if (q != 0) out.appendByte(q)
+            appendSpan(aValOff(a), aValLen(a), out, checked)
+            if (q != 0) out.appendByte(q)
           }
         }
         a = aNext(a)
       }
       if ((flags(id) & F_SELF_CLOSED) != 0) {
-        if ((flags(id) & F_SELF_SPACE) != 0) out.append(' ')
-        out.append('/')
-        out.append('>')
+        if ((flags(id) & F_SELF_SPACE) != 0) out.appendByte(' ')
+        out.appendByte('/')
+        out.appendByte('>')
       } else {
-        out.append('>')
-        if (isContentTag(id)) renderContentTagInner(id, out)
-        else renderInner(id, out, encodeContent)
-        if ((flags(id) & F_END_TAG) != 0) {
-          out.append('<').append('/')
-          appendSpanTo(nameOff(id), nameLen(id), out)
-          out.append('>')
-        }
+        out.appendByte('>')
+        if (isContentTag(id)) renderContentTagInner(id, out, checked)
+        else renderInner(id, out, encodeContent, checked)
+        if ((flags(id) & F_END_TAG) != 0) renderEndTag(id, out, checked)
       }
     case _ => ()
   }
 
-  def renderInner(id: Int, out: java.lang.StringBuilder, encodeContent: Boolean): Unit = {
+  private def renderEndTag(id: Int, out: Utf8Builder, checked: Boolean): Unit = {
+    out.appendByte('<'); out.appendByte('/')
+    appendSpan(nameOff(id), nameLen(id), out, checked)
+    out.appendByte('>')
+  }
+
+  def renderInner(id: Int, out: Utf8Builder, encodeContent: Boolean, checked: Boolean): Unit = {
     if (kind(id) == ELEM && isContentTag(id)) {
-      renderContentTagInner(id, out)
+      renderContentTagInner(id, out, checked)
       return
     }
     var c = firstChild(id)
-    while (c >= 0) { renderNode(c, out, encodeContent); c = nextSib(c) }
+    while (c >= 0) { renderNode(c, out, encodeContent, checked); c = nextSib(c) }
   }
 
   /** a content tag renders its raw text span PLUS any text children a
@@ -789,49 +843,42 @@ final class Arena(initialNodes: Int = 256) {
     * must agree with text(), or the appended text would vanish from
     * html()/sourceCode while surviving in text()). Raw, never encoded:
     * content-tag bodies are literal character data. */
-  private def renderContentTagInner(id: Int, out: java.lang.StringBuilder): Unit = {
-    appendSpanTo(textOff(id), textLen(id), out)
+  private def renderContentTagInner(id: Int, out: Utf8Builder, checked: Boolean): Unit = {
+    appendSpan(textOff(id), textLen(id), out, checked)
     var c = firstChild(id)
     while (c >= 0) {
       if (kind(c) == TEXT || kind(c) == SPACES)
-        appendSpanTo(textOff(c), textLen(c), out)
+        appendSpan(textOff(c), textLen(c), out, checked)
       c = nextSib(c)
     }
   }
 
   /** encode raw `<`/`>` that entered text content via lenient parsing or raw
-    * text mutation; stored entities stay intact (render encode_content). */
-  private def encodeLtGt(off: Int, len: Int, out: java.lang.StringBuilder): Unit = {
+    * text mutation; stored entities stay intact (render encode_content).
+    * The runs between them are spans of their own, as they always were. */
+  private def encodeLtGt(off: Int, len: Int, out: Utf8Builder, checked: Boolean): Unit = {
     var i = off
     val end = off + len
     var runStart = off
     while (i < end) {
       val b = buf(i)
       if (b == '<' || b == '>') {
-        if (i > runStart) appendSpanTo(runStart, i - runStart, out)
-        out.append(if (b == '<') "&lt;" else "&gt;")
+        if (i > runStart) appendSpan(runStart, i - runStart, out, checked)
+        out.appendAscii(if (b == '<') "&lt;" else "&gt;")
         runStart = i + 1
       }
       i += 1
     }
-    if (i > runStart) appendSpanTo(runStart, i - runStart, out)
+    if (i > runStart) appendSpan(runStart, i - runStart, out, checked)
   }
 
-  def innerHtml(id: Int): String = {
-    val sb = new java.lang.StringBuilder(64)
-    renderInner(id, sb, encodeContent = true)
-    sb.toString
-  }
+  def innerHtml(id: Int): String =
+    renderString(renderInner(id, _, encodeContent = true, checked = false))
 
-  def outerHtml(id: Int): String = {
-    val sb = new java.lang.StringBuilder(64)
-    renderNode(id, sb, encodeContent = true)
-    sb.toString
-  }
+  def outerHtml(id: Int): String =
+    renderString(renderNode(id, _, encodeContent = true, checked = false))
 
-  def sourceCode(): String = {
-    val sb = new java.lang.StringBuilder(bufLen)
-    renderInner(0, sb, encodeContent = false)
-    sb.toString
-  }
+  /** the whole document re-rendered; its output is about `bufLen` long. */
+  def sourceCode(): String =
+    renderString(renderInner(0, _, encodeContent = false, checked = false), bufLen + 64)
 }

@@ -1,22 +1,39 @@
 package graft.dom
 
-/** Reusable UTF-8 output buffer: the extraction hot path encodes text
-  * straight from arena chars to UTF-8 bytes, skipping the
-  * StringBuilder -> String -> UTF8String re-encoding passes (each a full
-  * walk over the output). */
+/** Growable UTF-8 output buffer. Text extraction copies arena runs into it
+  * and the renderer writes whole documents into it, so output is decoded
+  * at most once (`toUtf8String`) or handed on as bytes (`toBytes`), never
+  * built up char by char in UTF-16. */
 final class Utf8Builder(initial: Int = 1 << 14) {
-  var buf: Array[Byte] = new Array[Byte](initial)
+  var buf: Array[Byte] = new Array[Byte](math.max(initial, 16))
   var len: Int = 0
 
   def reset(): Unit = len = 0
 
-  private def ensure(extra: Int): Unit = {
+  private def ensure(extra: Long): Unit = {
+    // Long arithmetic: `cap * 2` wraps negative past 1 GiB
     val need = len + extra
     if (need > buf.length) {
-      var cap = buf.length * 2
+      var cap = buf.length.toLong * 2
       while (cap < need) cap *= 2
-      buf = java.util.Arrays.copyOf(buf, cap)
+      buf = java.util.Arrays.copyOf(buf, math.min(cap, (Int.MaxValue - 8).toLong).toInt)
     }
+  }
+
+  /** one byte; callers pass ASCII markup. */
+  def appendByte(b: Byte): Unit = {
+    if (len == buf.length) ensure(1)
+    buf(len) = b
+    len += 1
+  }
+
+  /** an ASCII-only literal (markup such as `<!--` or `&lt;`). */
+  def appendAscii(s: String): Unit = {
+    val n = s.length
+    ensure(n)
+    var i = 0
+    while (i < n) { buf(len + i) = s.charAt(i).toByte; i += 1 }
+    len += n
   }
 
   def appendCodePoint(cp: Int): Unit = {
@@ -40,39 +57,11 @@ final class Utf8Builder(initial: Int = 1 << 14) {
     }
   }
 
-  /** append UTF-16 chars [from, until) encoding to UTF-8. */
-  def appendChars(s: Array[Char], from: Int, until: Int): Unit = {
-    ensure((until - from) * 3 + 4)
-    var i = from
-    var o = len
-    val b = buf
-    while (i < until) {
-      val c = s(i)
-      if (c < 0x80) { b(o) = c.toByte; o += 1; i += 1 }
-      else if (c < 0x800) {
-        b(o) = (0xc0 | (c >> 6)).toByte
-        b(o + 1) = (0x80 | (c & 0x3f)).toByte
-        o += 2; i += 1
-      } else if (Character.isHighSurrogate(c) && i + 1 < until && Character.isLowSurrogate(s(i + 1))) {
-        val cp = Character.toCodePoint(c, s(i + 1))
-        b(o) = (0xf0 | (cp >> 18)).toByte
-        b(o + 1) = (0x80 | ((cp >> 12) & 0x3f)).toByte
-        b(o + 2) = (0x80 | ((cp >> 6) & 0x3f)).toByte
-        b(o + 3) = (0x80 | (cp & 0x3f)).toByte
-        o += 4; i += 2
-      } else {
-        b(o) = (0xe0 | (c >> 12)).toByte
-        b(o + 1) = (0x80 | ((c >> 6) & 0x3f)).toByte
-        b(o + 2) = (0x80 | (c & 0x3f)).toByte
-        o += 3; i += 1
-      }
-    }
-    len = o
-  }
-
+  /** a String's UTF-8 encoding as `getBytes(UTF_8)` gives it: an
+    * unpaired surrogate becomes `?`, so the output stays well-formed. */
   def appendString(s: String): Unit = {
-    val arr = s.toCharArray
-    appendChars(arr, 0, arr.length)
+    val b = s.getBytes(java.nio.charset.StandardCharsets.UTF_8)
+    appendBytes(b, 0, b.length)
   }
 
   /** raw UTF-8 bytes — memcpy (hot path for entity-free text runs). */
@@ -83,4 +72,7 @@ final class Utf8Builder(initial: Int = 1 << 14) {
   }
 
   def toBytes: Array[Byte] = java.util.Arrays.copyOf(buf, len)
+
+  /** the one decode of the whole output. */
+  def toUtf8String: String = new String(buf, 0, len, java.nio.charset.StandardCharsets.UTF_8)
 }

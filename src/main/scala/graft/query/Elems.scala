@@ -1,6 +1,6 @@
 package graft.query
 
-import graft.dom.Entities
+import graft.dom.{Entities, Utf8Builder}
 import graft.html.{ParseOptions, Parser}
 import graft.selector.{Combinator, Selector, Segment, Simple}
 import scala.collection.mutable.ArrayBuffer
@@ -270,16 +270,16 @@ final class Elems(var doc: VDoc, var ids: Array[Int]) {
     sb.toString
   }
 
-  def textChars(): String = {
-    val sb = new java.lang.StringBuilder(64)
-    ids.foreach(e => sb.append(a.textChars(e)))
-    sb.toString
-  }
+  def textChars(): String = renderAll(a.textCharsTo(_, _, checked = false))
 
   def html(): String = if (ids.isEmpty) "" else a.innerHtml(ids(0))
-  def htmls(): String = ids.map(a.innerHtml).mkString
+  def htmls(): String = renderAll(a.renderInner(_, _, encodeContent = true, checked = false))
   def outerHtml(): String = if (ids.isEmpty) "" else a.outerHtml(ids(0))
-  def outerHtmls(): String = ids.map(a.outerHtml).mkString
+  def outerHtmls(): String = renderAll(a.renderNode(_, _, encodeContent = true, checked = false))
+
+  /** every element rendered into one UTF-8 buffer, decoded once. */
+  private def renderAll(render: (Int, Utf8Builder) => Unit): String =
+    if (ids.isEmpty) "" else a.renderString(out => ids.foreach(render(_, out)))
 
   /** set_text: encode + single text child; content tags raw
     * (reference src/lib.rs:247-296). */

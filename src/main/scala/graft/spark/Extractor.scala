@@ -407,7 +407,7 @@ object Extractor extends Serializable {
   private val mainUtf8: (VDoc, Elems) => org.apache.spark.unsafe.types.UTF8String = (doc, main) => {
     val ub = outBuilder()
     ub.reset()
-    main.ids.foreach(e => doc.arena.textContentUtf8(e, ub))
+    main.ids.foreach(e => doc.arena.textUtf8Exact(e, ub))
     org.apache.spark.unsafe.types.UTF8String.fromBytes(ub.toBytes)
   }
 
@@ -441,7 +441,9 @@ object Extractor extends Serializable {
 
   /** byte-native hot path for BINARY input: UTF-8 in (parseBytes), UTF-8 out
     * (Utf8Builder) — no UTF-16 String round trip of the page, same as
-    * extract_main's path. */
+    * extract_main's path. The bytes are those of `Elems.text()`: a match
+    * with a run malformed on its own takes its decoded text re-encoded, so
+    * a STRING result never carries malformed UTF-8. */
   def extractTextCodegenBinary(html: Array[Byte],
       selector: org.apache.spark.unsafe.types.UTF8String): org.apache.spark.unsafe.types.UTF8String = {
     if (html == null || selector == null) return null
@@ -454,13 +456,13 @@ object Extractor extends Serializable {
       ub.reset()
       if (compounds != null) {
         val a = doc.arena
-        forEachMatch(doc, compounds, 0)(c => a.textContentUtf8(c, ub))
+        forEachMatch(doc, compounds, 0)(c => a.textUtf8Exact(c, ub))
       } else compiled(selStr) match {
         case Left(_) => return null
         case Right(sel) =>
           import scala.collection.mutable.ArrayBuffer
           val found = graft.query.Engine.findSelector(doc, ArrayBuffer(0), sel)
-          found.foreach(e => doc.arena.textContentUtf8(e, ub))
+          found.foreach(e => doc.arena.textUtf8Exact(e, ub))
       }
       org.apache.spark.unsafe.types.UTF8String.fromBytes(ub.toBytes)
     } catch {
@@ -470,20 +472,24 @@ object Extractor extends Serializable {
   }
 
   /** outerHtml() of every selector match in document order (the reference
-    * flow find(sel) + outer_html, reference elements.rs render path). */
-  private def extractOuterHtmlFrom(doc: VDoc, selector: String): Array[String] =
+    * flow find(sel) + outer_html, reference elements.rs render path), each
+    * rendered as UTF-8 straight into its UTF8String. */
+  private def extractOuterHtmlFrom(doc: VDoc, selector: String): org.apache.spark.sql.catalyst.util.ArrayData =
     compiled(selector) match {
       case Left(_) => null
       case Right(sel) =>
         import scala.collection.mutable.ArrayBuffer
         val found = graft.query.Engine.findSelector(doc, ArrayBuffer(0), sel)
-        val out = new Array[String](found.length)
+        val ub = outBuilder()
+        val out = new Array[Any](found.length)
         var i = 0
         while (i < found.length) {
-          out(i) = new graft.query.Elems(doc, Array(found(i))).outerHtml()
+          ub.reset()
+          doc.arena.renderNode(found(i), ub, encodeContent = true, checked = true)
+          out(i) = org.apache.spark.unsafe.types.UTF8String.fromBytes(ub.toBytes)
           i += 1
         }
-        out
+        new org.apache.spark.sql.catalyst.util.GenericArrayData(out)
     }
 
   def extractOuterHtmlCodegen(html: org.apache.spark.unsafe.types.UTF8String,
@@ -498,7 +504,7 @@ object Extractor extends Serializable {
     try {
       val doc = parseShared(html)
       if (doc == null) return null
-      attrsToArrayData(extractOuterHtmlFrom(doc, sel.toString))
+      extractOuterHtmlFrom(doc, sel.toString)
     } catch {
       case scala.util.control.NonFatal(_) => null
       case _: StackOverflowError => null // row degrades, task survives (see first belt note)

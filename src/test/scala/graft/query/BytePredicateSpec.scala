@@ -6,7 +6,7 @@ import org.apache.spark.sql.{Row, SparkSession}
 import org.apache.spark.sql.types.{BinaryType, IntegerType, StringType, StructField, StructType}
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
-import graft.dom.{Arena, Utf8Builder}
+import graft.dom.Arena
 import graft.selector.{Selector, Simple}
 import graft.spark.Extractor
 
@@ -330,11 +330,9 @@ class BytePredicateSpec extends AnyFunSuite with BeforeAndAfterAll {
       val doc = load(name, html, renamed = false)
       val a = doc.arena
       val found = Oracle.find(a, parseSel(s))
-      val ub = new Utf8Builder()
-      found.foreach(a.textContentUtf8(_, ub))
       val attrs = found.flatMap(e => new Elems(doc, Array(e)).attr(sqlAttr(name)).map(_.value))
       id += 1
-      (id, name, html, s, sqlAttr(name), found.length.toLong, new String(ub.toBytes, UTF_8), attrs)
+      (id, name, html, s, sqlAttr(name), found.length.toLong, new Elems(doc, found.toArray).text(), attrs)
     }
   }
 
