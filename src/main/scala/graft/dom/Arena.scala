@@ -32,8 +32,21 @@ import scala.collection.mutable
   * buffer equals the per-span decodes joined. Output that is decoded
   * anyway (the String entries) needs no per-span check: see
   * [[renderString]].
+  *
+  * Element-name index ([[nameHead]]): one chain per lower-case tag name
+  * holding the in-tree elements of that name in document order, built
+  * lazily by one pre-order walk from the root over elements (the walk
+  * `Engine`'s root-context selectors make; not id order, which inserted
+  * and moved nodes break). It is valid
+  * while `structVersion` is unchanged: `clearState` and every structural
+  * writer — `alloc`/`allocChild`, `appendChild`, `insertBefore` (and so
+  * `insertAfter`/`prependChild`), `detach`/`detachAll`, `clearChildren` —
+  * bump it, so a read-only document builds the index once however many
+  * selectors read it. Name spans change only on nodes just allocated
+  * (parser, deep copy), before any query sees them. Its arrays are
+  * allocated on the first build, not here, and reused by later builds.
   */
-final class Arena(initialNodes: Int = 256) {
+final class Arena(initialNodes: Int = 256, initialAttrs: Int = 64, initialBytes: Int = 1024) {
 
   // ---- node kinds ----
   final val ROOT: Byte = 0
@@ -75,16 +88,16 @@ final class Arena(initialNodes: Int = 256) {
 
   // attribute pool (linked list per element)
   var an: Int = 0
-  var aKeyOff: Array[Int] = new Array[Int](64)
-  var aKeyLen: Array[Int] = new Array[Int](64)
-  var aValOff: Array[Int] = new Array[Int](64) // -1 => boolean attribute
-  var aValLen: Array[Int] = new Array[Int](64)
-  var aQuote: Array[Char] = new Array[Char](64) // 0 => unquoted
-  var aNext: Array[Int] = new Array[Int](64)
-  var aRemoved: Array[Boolean] = new Array[Boolean](64)
+  var aKeyOff: Array[Int] = new Array[Int](initialAttrs)
+  var aKeyLen: Array[Int] = new Array[Int](initialAttrs)
+  var aValOff: Array[Int] = new Array[Int](initialAttrs) // -1 => boolean attribute
+  var aValLen: Array[Int] = new Array[Int](initialAttrs)
+  var aQuote: Array[Char] = new Array[Char](initialAttrs) // 0 => unquoted
+  var aNext: Array[Int] = new Array[Int](initialAttrs)
+  var aRemoved: Array[Boolean] = new Array[Boolean](initialAttrs)
 
   // shared UTF-8 byte store: [0, srcLen) = source; [srcLen, bufLen) = overflow
-  var buf: Array[Byte] = new Array[Byte](1024)
+  var buf: Array[Byte] = new Array[Byte](initialBytes)
   var bufLen: Int = 0
 
   /** document id cache (first element wins), built at parse (reference id
@@ -95,7 +108,12 @@ final class Arena(initialNodes: Int = 256) {
 
   var isDocument: Boolean = false
 
+  /** bumped by every change to the tree's shape; the name index is valid
+    * while it is unchanged */
+  private var structVersion: Long = 0L
+
   private def clearState(): Unit = {
+    structVersion += 1
     n = 0; an = 0
     idMap.clear(); idMapDirty = false; isDocument = false
   }
@@ -141,6 +159,7 @@ final class Arena(initialNodes: Int = 256) {
 
   def alloc(k: Byte): Int = {
     if (n == kind.length) growNodes()
+    structVersion += 1
     val id = n; n += 1
     kind(id) = k
     parent(id) = -1; firstChild(id) = -1; lastChild(id) = -1
@@ -157,6 +176,7 @@ final class Arena(initialNodes: Int = 256) {
     * `val id = alloc(k); appendChild(p, id); id`. */
   def allocChild(k: Byte, p: Int): Int = {
     if (n == kind.length) growNodes()
+    structVersion += 1
     val id = n; n += 1
     kind(id) = k
     parent(id) = p
@@ -323,19 +343,14 @@ final class Arena(initialNodes: Int = 256) {
     * [[sameLowerName]]; read from the span unless it is malformed. */
   def lowerNameHash(x: Int): Int = {
     val off = nameOff(x); val len = nameLen(x)
-    var h = 1
-    if (Utf8.wellFormed(buf, off, len)) {
-      var i = 0
-      while (i < len) { h = 31 * h + foldAscii(buf(off + i)); i += 1 }
-    } else {
+    if (Utf8.wellFormed(buf, off, len)) Arena.foldedHash(buf, off, len)
+    else {
       val b = lowerName(x).getBytes(java.nio.charset.StandardCharsets.UTF_8)
-      var i = 0
-      while (i < b.length) { h = 31 * h + b(i); i += 1 }
+      Arena.foldedHash(b, 0, b.length)
     }
-    h
   }
 
-  @inline private def foldAscii(c: Byte): Byte = if (c >= 'A' && c <= 'Z') (c + 32).toByte else c
+  @inline private def foldAscii(c: Byte): Byte = Arena.foldAscii(c)
 
   /** lowercase tag name of an element ("" for non-elements / root);
     * ASCII fold (reference to_ascii_lowercase semantics). */
@@ -433,6 +448,7 @@ final class Arena(initialNodes: Int = 256) {
 
   // ---- tree structure ----
   def appendChild(p: Int, c: Int): Unit = {
+    structVersion += 1
     parent(c) = p
     prevSib(c) = lastChild(p)
     nextSib(c) = -1
@@ -481,6 +497,7 @@ final class Arena(initialNodes: Int = 256) {
   /** unlink `c` from its parent's child list; nodeIdx of the following
     * siblings is left for the caller to renumber. */
   private def unlink(c: Int): Unit = {
+    structVersion += 1
     val p = parent(c)
     val pr = prevSib(c); val nx = nextSib(c)
     if (pr >= 0) nextSib(pr) = nx else firstChild(p) = nx
@@ -494,6 +511,7 @@ final class Arena(initialNodes: Int = 256) {
 
   /** insert `c` before existing child `ref` (same parent as ref). */
   def insertBefore(ref: Int, c: Int): Unit = {
+    structVersion += 1
     val p = parent(ref)
     parent(c) = p
     val pr = prevSib(ref)
@@ -514,6 +532,7 @@ final class Arena(initialNodes: Int = 256) {
   }
 
   def clearChildren(p: Int): Unit = {
+    structVersion += 1
     var c = firstChild(p)
     while (c >= 0) { val nx = nextSib(c); parent(c) = -1; prevSib(c) = -1; nextSib(c) = -1; c = nx }
     firstChild(p) = -1; lastChild(p) = -1
@@ -598,6 +617,166 @@ final class Arena(initialNodes: Int = 256) {
   def getElementById(idVal: String): Int = {
     rebuildIdMapIfDirty()
     idMap.getOrElse(idVal, -1)
+  }
+
+  // ---- element-name index (class doc) ----
+  private var ixVersion: Long = -1L
+  /** in-tree elements in document order, by position */
+  private var ixPre: Array[Int] = null
+  /** per position: the next position of an element of the same name, or -1 */
+  private var ixNext: Array[Int] = null
+  /** per bucket (one per name): its first and last position, an element
+    * of that name, and the name's folded hash */
+  private var ixHead: Array[Int] = null
+  private var ixTail: Array[Int] = null
+  private var ixRep: Array[Int] = null
+  private var ixHash: Array[Int] = null
+  /** per bucket: the packed name key ([[nameBucket]]), -1 for a long name */
+  private var ixKey: Array[Long] = null
+  private var ixBuckets: Int = 0
+  /** open addressing over buckets: bucket id or -1 */
+  private var ixSlots: Array[Int] = null
+
+  /** The first document position of the chain of in-tree elements whose
+    * ASCII-folded name equals the UTF-8 bytes `lower` (the relation of
+    * `Simple.Tag` matching), or -1 when there is none. Follow the chain in
+    * document order with [[nameNext]]; [[nameElem]] gives a position's
+    * element, and positions of different chains order by document order.
+    * `hash` is `Arena.foldedHash(lower)`. Elements with a name that is not
+    * well-formed UTF-8 are in no chain: no operand's bytes equal it. */
+  def nameHead(lower: Array[Byte], hash: Int): Int = {
+    if (ixVersion != structVersion) buildNameIndex()
+    val mask = ixSlots.length - 1
+    var s = (hash ^ (hash >>> 16)) & mask
+    while (ixSlots(s) >= 0) {
+      val b = ixSlots(s)
+      if (ixHash(b) == hash && spanEqIgnoreCase(nameOff(ixRep(b)), nameLen(ixRep(b)), lower))
+        return ixHead(b)
+      s = (s + 1) & mask
+    }
+    -1
+  }
+
+  /** the position after `pos` in its name chain, or -1 */
+  def nameNext(pos: Int): Int = ixNext(pos)
+
+  /** the element at a chain position */
+  def nameElem(pos: Int): Int = ixPre(pos)
+
+  /** one pre-order walk from the root, descending through elements only,
+    * appending each element to its name's chain. */
+  private def buildNameIndex(): Unit = {
+    if (ixPre == null || ixPre.length < n) {
+      val cap = math.max(Integer.highestOneBit(n) * 2, 16) // nodes added later fit
+      ixPre = new Array[Int](cap); ixNext = new Array[Int](cap)
+    }
+    if (ixSlots == null) {
+      ixSlots = new Array[Int](64)
+      ixHead = new Array[Int](32); ixTail = new Array[Int](32)
+      ixRep = new Array[Int](32); ixHash = new Array[Int](32); ixKey = new Array[Long](32)
+    }
+    java.util.Arrays.fill(ixSlots, -1)
+    ixBuckets = 0
+    val pre = ixPre; val next = ixNext
+    var count = 0
+    var c = firstChild(0)
+    while (c >= 0) {
+      var down = -1
+      if (kind(c) == ELEM) {
+        val b = nameBucket(c)
+        pre(count) = c
+        next(count) = -1
+        if (b >= 0) {
+          val t = ixTail(b)
+          if (t >= 0) next(t) = count else ixHead(b) = count
+          ixTail(b) = count
+        }
+        count += 1
+        down = firstChild(c)
+      }
+      if (down >= 0) c = down
+      else {
+        while (c > 0 && nextSib(c) < 0) c = parent(c)
+        c = if (c > 0) nextSib(c) else -1
+      }
+    }
+    ixVersion = structVersion
+  }
+
+  /** the bucket of element `e`'s name, added if new; -1 when the name is
+    * not well-formed UTF-8. Names of one bucket are equal under
+    * [[sameLowerName]], compared here as folded bytes (both well-formed):
+    * a name of up to 7 bytes packs them with its length into one `Long`
+    * key, so equal keys mean equal names; longer names compare bytes. */
+  private def nameBucket(e: Int): Int = {
+    val b = buf
+    val off = nameOff(e); val len = nameLen(e)
+    var h = 1
+    var key = 0L
+    var ascii = 0
+    var i = off
+    while (i < off + len) {
+      val c = b(i)
+      ascii |= c
+      val f = if (c >= 'A' && c <= 'Z') c + 32 else c
+      h = 31 * h + f
+      key = (key << 8) | (f & 0xff)
+      i += 1
+    }
+    key = if (len > 7) -1L else key | (len.toLong << 56)
+    if (ascii < 0 && !Utf8.wellFormed(b, off, len)) return -1
+    val slots = ixSlots
+    val mask = slots.length - 1
+    var s = (h ^ (h >>> 16)) & mask
+    while (slots(s) >= 0) {
+      val k = slots(s)
+      if (ixHash(k) == h && (if (key != -1L) ixKey(k) == key else sameFoldedName(ixRep(k), e))) return k
+      s = (s + 1) & mask
+    }
+    addBucket(e, h, key, s)
+  }
+
+  /** a new bucket for `e`'s name (hash `h`, free slot `s`) */
+  private def addBucket(e: Int, h: Int, key: Long, s: Int): Int = {
+    val b = ixBuckets
+    if (b == ixRep.length) {
+      ixHead = java.util.Arrays.copyOf(ixHead, b * 2)
+      ixTail = java.util.Arrays.copyOf(ixTail, b * 2)
+      ixRep = java.util.Arrays.copyOf(ixRep, b * 2)
+      ixHash = java.util.Arrays.copyOf(ixHash, b * 2)
+      ixKey = java.util.Arrays.copyOf(ixKey, b * 2)
+    }
+    ixRep(b) = e; ixHash(b) = h; ixKey(b) = key; ixHead(b) = -1; ixTail(b) = -1
+    ixBuckets += 1
+    if (ixBuckets * 2 > ixSlots.length) {
+      // rehash every bucket (this one included) into a table twice as large
+      ixSlots = new Array[Int](ixSlots.length * 2)
+      java.util.Arrays.fill(ixSlots, -1)
+      val mask = ixSlots.length - 1
+      var k = 0
+      while (k < ixBuckets) {
+        var t = (ixHash(k) ^ (ixHash(k) >>> 16)) & mask
+        while (ixSlots(t) >= 0) t = (t + 1) & mask
+        ixSlots(t) = k
+        k += 1
+      }
+    } else ixSlots(s) = b
+    b
+  }
+
+  /** the two name spans are equal bytes after ASCII folding: exactly
+    * [[sameLowerName]] when either name is ASCII (a name that is not
+    * well-formed decodes to a U+FFFD, which no ASCII name holds) */
+  def sameFoldedName(x: Int, y: Int): Boolean = {
+    val xo = nameOff(x); val len = nameLen(x)
+    val yo = nameOff(y)
+    if (nameLen(y) != len) return false
+    var i = 0
+    while (i < len) {
+      if (foldAscii(buf(xo + i)) != foldAscii(buf(yo + i))) return false
+      i += 1
+    }
+    true
   }
 
   // ================= text =================
@@ -881,4 +1060,18 @@ final class Arena(initialNodes: Int = 256) {
   /** the whole document re-rendered; its output is about `bufLen` long. */
   def sourceCode(): String =
     renderString(renderInner(0, _, encodeContent = false, checked = false), bufLen + 64)
+}
+
+object Arena {
+  @inline def foldAscii(c: Byte): Byte = if (c >= 'A' && c <= 'Z') (c + 32).toByte else c
+
+  /** the hash of `b[off, off+len)` folded to ASCII lower case:
+    * `lowerNameHash` of a well-formed name, and the key of the
+    * element-name index */
+  def foldedHash(b: Array[Byte], off: Int, len: Int): Int = {
+    var h = 1
+    var i = 0
+    while (i < len) { h = 31 * h + foldAscii(b(off + i)); i += 1 }
+    h
+  }
 }

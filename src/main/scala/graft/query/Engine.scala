@@ -14,6 +14,19 @@ import scala.collection.mutable.ArrayBuffer
   *
   * Node sets are `Array[Int]` of arena ids kept in document order with the
   * same uniqueness invariants the reference maintains.
+  *
+  * Root-context segments read the arena's element-name index
+  * (`Arena.nameHead`) instead of walking the whole tree: a `ChildrenAll`
+  * segment whose context is the document root and whose compound has a
+  * `Tag` starts from that tag's chain (the in-tree elements of that name in
+  * document order) filtered by the head simple, and runs the rest of the
+  * compound as a chain, as before. This is exact because `Tag` (priority
+  * 100) sorts ahead of every attribute and positional simple: the set the
+  * first positional rule sees is the same. [[forEachMatch]] (the fused
+  * comma-group walk of `findSelector` and of `Extractor`'s `extract_*`
+  * entries) merges the chains by document position when every compound
+  * has a tag. Tagless compounds, sub-tree contexts and `Extractor`'s
+  * main-content strip walk keep the tree walk.
   */
 object Engine {
 
@@ -283,10 +296,7 @@ object Engine {
     override def initialValue(): Utf8Builder = new Utf8Builder(1 << 12)
   }
 
-  def isPositional(s: Simple): Boolean = s match {
-    case _: Simple.Nth | Simple.OnlyChild | Simple.OnlyOfType => true
-    case _ => false
-  }
+  def isPositional(s: Simple): Boolean = Simple.isPositional(s)
 
   /** Per-element predicate for non-positional simples — the one entry for
     * `find`, `filter`/`not`/`has` and the fused walks of `Extractor`. Tag,
@@ -335,7 +345,10 @@ object Engine {
         }
         onlyComments
       case Simple.Checked => matchChecked(doc, e)
-      case Simple.Not(sel) => !matchesSelector(doc, e, sel)
+      case not: Simple.Not =>
+        // a per-element inner selector skips filterTypeHandle's set machinery
+        if (not.compounds != null) !matchesAnyCompound(doc, e, not.compounds)
+        else !matchesSelector(doc, e, not.sel)
       case Simple.Has(sel) => findSelector(doc, ArrayBuffer(e), sel).nonEmpty
       case Simple.Alias(sel) => matchesSelector(doc, e, sel)
       case _ => false // positional handled by matchAllPositional
@@ -514,7 +527,8 @@ object Engine {
             val p = a.parent(ids(i))
             var j = i + 1
             while (j < ids.length && a.parent(ids(j)) == p) j += 1
-            if (p >= 0) {
+            if (p >= 0 && ofType && oneNameInOrder(a, ids, i, j)) nthOfOneName(a, p, ids, i, j, hasN, n, idx, last, out)
+            else if (p >= 0) {
               val childs = elementChildren(a, p)
               val total = childs.length
               val allow = allowedIndexes(hasN, n, idx, total)
@@ -545,6 +559,55 @@ object Engine {
         }
         out
       case _ => ids
+    }
+  }
+
+  /** `ids[from, until)`, children of one parent, share one lower-case name
+    * and follow the children's order (always so after a `Tag` rule) */
+  private def oneNameInOrder(a: Arena, ids: ArrayBuffer[Int], from: Int, until: Int): Boolean = {
+    val rep = ids(from)
+    val ascii = Utf8.isAscii(a.buf, a.nameOff(rep), a.nameLen(rep))
+    var k = from + 1
+    while (k < until) {
+      val x = ids(k)
+      if (a.nodeIdx(ids(k - 1)) >= a.nodeIdx(x)) return false
+      if (!(if (ascii) a.sameFoldedName(x, rep) else a.sameLowerName(x, rep))) return false
+      k += 1
+    }
+    true
+  }
+
+  /** `*-of-type` for candidates `ids[from, until)` of parent `p` that share
+    * one name, in child order: a candidate's rank counts the siblings of
+    * that name, read in two passes over the children with no list of them
+    * and no table of their names. */
+  private def nthOfOneName(a: Arena, p: Int, ids: ArrayBuffer[Int], from: Int, until: Int,
+      hasN: Boolean, n: Long, idx: Long, last: Boolean, out: ArrayBuffer[Int]): Unit = {
+    val rep = ids(from)
+    val ascii = Utf8.isAscii(a.buf, a.nameOff(rep), a.nameLen(rep))
+    @inline def same(x: Int): Boolean = if (ascii) a.sameFoldedName(x, rep) else a.sameLowerName(x, rep)
+    var total = 0
+    var named = 0
+    var c = a.firstChild(p)
+    while (c >= 0) {
+      if (a.kind(c) == a.ELEM) { total += 1; if (same(c)) named += 1 }
+      c = a.nextSib(c)
+    }
+    val allow = allowedIndexes(hasN, n, idx, total)
+    if (allow.isEmpty) return
+    var k = from
+    var fwd = 0
+    c = a.firstChild(p)
+    while (c >= 0 && k < until) {
+      if (a.kind(c) == a.ELEM && same(c)) {
+        if (c == ids(k)) {
+          val rank = if (last) named - 1 - fwd else fwd
+          if (java.util.Arrays.binarySearch(allow, rank) >= 0) out += c
+          k += 1
+        }
+        fwd += 1
+      }
+      c = a.nextSib(c)
     }
   }
 
@@ -779,7 +842,9 @@ object Engine {
         if (!hasEle(doc, ids, target, Combinator.ChildrenAll, Nil)) return new ArrayBuffer[Int](0)
         cur = ArrayBuffer(target)
       case head =>
-        cur = applySimple(doc, ids, head, comb)
+        val tag =
+          if (comb == Combinator.ChildrenAll && isRoot(ids) && !isPositional(head)) tagOf(simples) else null
+        cur = if (tag != null) namedMatching(doc, tag, head) else applySimple(doc, ids, head, comb)
     }
     var rest = simples.tail
     while (rest.nonEmpty && cur.nonEmpty) {
@@ -787,6 +852,126 @@ object Engine {
       rest = rest.tail
     }
     cur
+  }
+
+  @inline private def isRoot(ids: ArrayBuffer[Int]): Boolean = ids.length == 1 && ids(0) == 0
+
+  /** the compound's tag rule, or null */
+  private def tagOf(simples: List[Simple]): Simple.Tag = {
+    var rest = simples
+    while (rest.nonEmpty) {
+      rest.head match {
+        case t: Simple.Tag => return t
+        case _ => rest = rest.tail
+      }
+    }
+    null
+  }
+
+  private def tagOf(simples: Array[Simple]): Simple.Tag = {
+    var i = 0
+    while (i < simples.length) {
+      simples(i) match {
+        case t: Simple.Tag => return t
+        case _ => i += 1
+      }
+    }
+    null
+  }
+
+  /** the in-tree elements named `tag` that match `head`, in document order */
+  private def namedMatching(doc: VDoc, tag: Simple.Tag, head: Simple): ArrayBuffer[Int] = {
+    val a = doc.arena
+    val out = new ArrayBuffer[Int](8)
+    var pos = a.nameHead(tag.utf8, tag.hash)
+    while (pos >= 0) {
+      val e = a.nameElem(pos)
+      if ((head eq tag) || matchOne(doc, e, head)) out += e
+      pos = a.nameNext(pos)
+    }
+    out
+  }
+
+  def matchesCompound(doc: VDoc, e: Int, simples: Array[Simple]): Boolean = {
+    var si = 0
+    while (si < simples.length) {
+      if (!matchOne(doc, e, simples(si))) return false
+      si += 1
+    }
+    true
+  }
+
+  def matchesAnyCompound(doc: VDoc, e: Int, compounds: Array[Array[Simple]]): Boolean = {
+    var pi = 0
+    while (pi < compounds.length) {
+      if (matchesCompound(doc, e, compounds(pi))) return true
+      pi += 1
+    }
+    false
+  }
+
+  /** Calls `hit` on every element below `node` that matches any of
+    * `compounds` (non-positional simples), in document order, each once:
+    * `find`'s doc-order union of descendant comma groups. Below the root,
+    * when every compound has a tag, it scans the tags' chains of the
+    * element-name index, merged by document position; otherwise it walks
+    * the subtree. */
+  def forEachMatch(doc: VDoc, compounds: Array[Array[Simple]], node: Int, hit: Int => Unit): Unit =
+    if (node != 0 || !forEachNamedMatch(doc, compounds, hit)) walkMatches(doc, compounds, node, hit)
+
+  private def walkMatches(doc: VDoc, compounds: Array[Array[Simple]], node: Int, hit: Int => Unit): Unit = {
+    val a = doc.arena
+    var c = a.firstChild(node)
+    while (c >= 0) {
+      if (a.kind(c) == a.ELEM) {
+        if (matchesAnyCompound(doc, c, compounds)) hit(c)
+        if (a.firstChild(c) >= 0) walkMatches(doc, compounds, c, hit)
+      }
+      c = a.nextSib(c)
+    }
+  }
+
+  /** [[forEachMatch]] from the root through the name index; false (and no
+    * call of `hit`) when some compound has no tag. */
+  private def forEachNamedMatch(doc: VDoc, compounds: Array[Array[Simple]], hit: Int => Unit): Boolean = {
+    val a = doc.arena
+    val k = compounds.length
+    val tags = new Array[Simple.Tag](k)
+    var j = 0
+    while (j < k) {
+      tags(j) = tagOf(compounds(j))
+      if (tags(j) == null) return false
+      j += 1
+    }
+    // one cursor per compound; compounds of one tag share a chain, so
+    // each step takes the least position and advances every cursor on it
+    val cur = new Array[Int](k)
+    j = 0
+    while (j < k) { cur(j) = a.nameHead(tags(j).utf8, tags(j).hash); j += 1 }
+    var go = true
+    while (go) {
+      var least = Int.MaxValue
+      j = 0
+      while (j < k) {
+        if (cur(j) >= 0) least = math.min(least, cur(j))
+        j += 1
+      }
+      if (least == Int.MaxValue) go = false
+      else {
+        val e = a.nameElem(least)
+        var matched = false
+        j = 0
+        while (j < k) {
+          if (cur(j) == least) {
+            if (!matched) matched = matchesCompound(doc, e, compounds(j))
+            cur(j) = a.nameNext(least)
+          }
+          j += 1
+        }
+        if (matched) hit(e)
+      }
+    }
+    true
   }
 
   /** reverse-combinator containment / prefix verification (reference
@@ -851,16 +1036,13 @@ object Engine {
     out
   }
 
-  /** true when every process is one descendant-combinator compound of pure
-    * per-element predicates — the shape of boilerplate-strip selectors like
-    * `script,style,nav,aside,footer,[hidden]`. */
-  private def allSimpleDescendantPreds(sel: Selector): Boolean =
-    sel.process.forall { p =>
-      p.shouldIn.isEmpty && p.query.lengthCompare(1) == 0 && {
-        val seg = p.query.head
-        seg.comb == Combinator.ChildrenAll && !seg.simples.exists(isPositional)
-      }
-    }
+  /** the selector's compounds when every comma group is one
+    * descendant-combinator compound of per-element predicates — the shape
+    * of boilerplate-strip selectors like `script,style,nav,aside,footer,
+    * [hidden]` — else null. */
+  def descendantCompounds(sel: Selector): Array[Array[Simple]] =
+    if (sel.process.forall(_.query.headOption.forall(_.comb == Combinator.ChildrenAll))) sel.compounds
+    else null
 
   /** execute a full selector from a context set (reference find_selector,
     * elements.rs:1776-1817, incl. should_in verification). */
@@ -871,39 +1053,15 @@ object Engine {
     // depth-first pass — the per-process union in document order is exactly
     // "any compound matches" during the walk (big win for the 7-group strip
     // recipe; semantics unchanged: doc order, unique)
-    if (sel.process.lengthCompare(1) > 0 && allSimpleDescendantPreds(sel)) {
-      val a = doc.arena
-      // flattened to arrays: no per-node closure or List traversal in the
-      // walk (this path runs once per page in the strip recipe)
-      val compounds: Array[Array[Simple]] =
-        sel.process.iterator.map(_.query.head.simples.toArray).toArray
-      val roots = if (ctx.length > 1) uniqueParents(a, ctx) else ctx
-      val out = new ArrayBuffer[Int](8)
-      def rec(node: Int): Unit = {
-        var c = a.firstChild(node)
-        while (c >= 0) {
-          if (a.kind(c) == a.ELEM) {
-            var matched = false
-            var pi = 0
-            while (!matched && pi < compounds.length) {
-              val simples = compounds(pi)
-              var all = true
-              var si = 0
-              while (all && si < simples.length) {
-                all = matchOne(doc, c, simples(si))
-                si += 1
-              }
-              matched = all
-              pi += 1
-            }
-            if (matched) out += c
-            if (a.firstChild(c) >= 0) rec(c)
-          }
-          c = a.nextSib(c)
-        }
+    if (sel.process.lengthCompare(1) > 0) {
+      val compounds = descendantCompounds(sel)
+      if (compounds != null) {
+        val roots = if (ctx.length > 1) uniqueParents(doc.arena, ctx) else ctx
+        val out = new ArrayBuffer[Int](8)
+        val hit: Int => Unit = out += _
+        roots.foreach(forEachMatch(doc, compounds, _, hit))
+        return out
       }
-      roots.foreach(rec)
-      return out
     }
     sel.process.foreach { p =>
       var group: ArrayBuffer[Int] = null

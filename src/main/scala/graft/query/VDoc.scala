@@ -74,8 +74,19 @@ final class VDoc(val arena: Arena) {
 /** Entry points — Vis::load / load_options / *_catch
   * (reference `src/lib.rs:1233-1265`). */
 object Vis {
+  /** an arena sized for `html` (one node per 16 chars, one attribute per
+    * 32, within a small floor and the default caps) instead of the fixed
+    * default: a 30-byte fragment needs a few nodes, not 256 */
+  private def arenaFor(html: String): Arena = {
+    val len = html.length
+    new Arena(
+      initialNodes = math.min(math.max(len >> 4, 8), 256),
+      initialAttrs = math.min(math.max(len >> 5, 4), 64),
+      initialBytes = math.min(len + 16, 1024))
+  }
+
   def loadOptions(html: String, opts: ParseOptions): Either[String, Elems] = {
-    val arena = new Arena()
+    val arena = arenaFor(html)
     Parser.parseInto(arena, html, opts) match {
       case Some(err) => Left(err.message)
       case None => Right(new VDoc(arena).rootElems)
@@ -89,7 +100,7 @@ object Vis {
     loadOptionsCatch(html, ParseOptions.compat, handle)
 
   def loadOptionsCatch(html: String, opts: ParseOptions, handle: String => Unit): Elems = {
-    val arena = new Arena()
+    val arena = arenaFor(html)
     Parser.parseInto(arena, html, opts) match {
       case Some(err) =>
         handle(err.message)

@@ -81,6 +81,8 @@ object Simple {
   final case class Tag(lower: String) extends Simple(P_NAME) {
     /** `lower` as UTF-8: name spans compare to it with ASCII folding */
     val utf8: Array[Byte] = lower.getBytes(java.nio.charset.StandardCharsets.UTF_8)
+    /** its key in the arena's element-name index */
+    val hash: Int = graft.dom.Arena.foldedHash(utf8, 0, utf8.length)
   }
   final case class Cls(name: String) extends Simple(P_CLASS) {
     val operand: Operand = new Operand(name)
@@ -105,10 +107,20 @@ object Simple {
   final case class Contains(search: String) extends Simple(P_PSEUDO) {
     val operand: Operand = new Operand(search)
   }
-  final case class Not(sel: Selector) extends Simple(P_PSEUDO)
+  final case class Not(sel: Selector) extends Simple(P_PSEUDO) {
+    /** `sel`'s comma groups as per-element compounds ([[Selector.compounds]]),
+      * or null when `:not` must run the filter engine */
+    val compounds: Array[Array[Simple]] = sel.compounds
+  }
   final case class Has(sel: Selector) extends Simple(P_PSEUDO)
   /** :header/:input/:submit — alias expansion (reference constants.rs:24-27) */
   final case class Alias(sel: Selector) extends Simple(P_PSEUDO)
+
+  /** rules whose answer depends on the element's siblings */
+  def isPositional(s: Simple): Boolean = s match {
+    case _: Nth | OnlyChild | OnlyOfType => true
+    case _ => false
+  }
 }
 
 /** compound = simples sharing one element; comb = entry combinator */
@@ -119,6 +131,17 @@ final case class Segment(comb: Combinator.Value, simples: List[Simple]) {
 final case class Process(shouldIn: Option[List[Segment]], query: List[Segment])
 
 final case class Selector(process: List[Process]) {
+  /** The comma groups as flat compounds when each group is one compound of
+    * non-positional simples with no `shouldIn` prefix, else null. Such a
+    * selector matches an element exactly when some compound's simples all
+    * match it: `filter`/`is` apply the one segment as a chain, and a chain
+    * of non-positional simples filters each element on its own. */
+  lazy val compounds: Array[Array[Simple]] =
+    if (process.forall(p => p.shouldIn.isEmpty && p.query.lengthCompare(1) == 0 &&
+      !p.query.head.simples.exists(Simple.isPositional)))
+      process.iterator.map(_.query.head.simples.toArray).toArray
+    else null
+
   /** inject a head combinator (reference `selector/mod.rs:270-288`):
     * a ChildrenAll head is replaced; otherwise a `*` segment is prefixed. */
   def withHeadCombinator(comb: Combinator.Value): Selector =

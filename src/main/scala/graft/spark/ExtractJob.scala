@@ -124,6 +124,11 @@ private[spark] final class LineageAccumulator(buckets: Int)
   *    so on `file:` paths permissions are set in-process instead of by one
   *    forked `chmod` per created file and directory; other schemes ignore
   *    the options.
+  *  - **no dictionary for unique columns**: the extracted write turns off
+  *    parquet dictionary encoding for `text` and `url`
+  *    (`PlainColumns`). Each row holds its own value, so the
+  *    dictionary writer only hashed every value before falling back to
+  *    plain encoding once its page filled up.
   *
   * At 100 TB the only wide exchange is the single hash repartition; the
   * extraction itself is embarrassingly parallel map work.
@@ -167,6 +172,11 @@ object ExtractJob {
 
   def bucketCol(salt: Int, buckets: Int) =
     pmod(hash(col("url"), lit(salt)), lit(buckets))
+
+  /** write options that keep the per-row-unique columns plain-encoded
+    * (parquet's per-column `parquet.enable.dictionary#<column>`) */
+  private val PlainColumns: Map[String, String] =
+    Seq("text", "url").map(c => s"parquet.enable.dictionary#$c" -> "false").toMap
 
   // encoders derived once per JVM: reflective derivation costs tens of ms
   // of serial driver time, which `run` would otherwise pay per call
@@ -247,6 +257,7 @@ object ExtractJob {
       .partitionBy("bucket")
       .option("partitionOverwriteMode", "dynamic")
       .option("parquet.block.size", cfg.rowGroupBytes)
+      .options(PlainColumns)
       .mode(SaveMode.Overwrite)
       .parquet(extractedPath)
 

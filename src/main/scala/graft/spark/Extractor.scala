@@ -2,7 +2,7 @@ package graft.spark
 
 import graft.dom.Arena
 import graft.html.{ParseOptions, Parser}
-import graft.query.{Elems, VDoc}
+import graft.query.{Elems, Engine, VDoc}
 import graft.selector.Selector
 import java.util.concurrent.ConcurrentHashMap
 
@@ -185,19 +185,6 @@ object Extractor extends Serializable {
     out
   }
 
-  /** a selector's comma groups as flat compounds when every group is a
-    * single-segment descendant predicate of non-positional simples
-    * (matching is done on the intact tree, exactly like find): these
-    * qualify for the fused one-pass tree walk instead of the general
-    * engine. Null when any group needs the engine. */
-  private def simpleCompounds(sel: graft.selector.Selector): Array[Array[graft.selector.Simple]] =
-    if (sel.process.forall(p =>
-      p.shouldIn.isEmpty && p.query.lengthCompare(1) == 0 &&
-        p.query.head.comb == graft.selector.Combinator.ChildrenAll &&
-        !p.query.head.simples.exists(graft.query.Engine.isPositional)))
-      sel.process.iterator.map(_.query.head.simples.toArray).toArray
-    else null
-
   private def stripCompounds(recipe: Recipe): Array[Array[graft.selector.Simple]] =
     compiledCompounds(recipe.remove) // per-JVM cached (hot path: per row)
 
@@ -216,8 +203,12 @@ object Extractor extends Serializable {
     computed
   }
 
-  /** cached fused-walk compounds per selector string (null entries mean
-    * "needs the general engine"); same cap discipline as the selector
+  /** cached fused-walk compounds per selector string: a selector's comma
+    * groups as flat compounds when every group is a single-segment
+    * descendant predicate of non-positional simples
+    * (`Engine.descendantCompounds`), matched in one document-order pass
+    * ([[Engine.forEachMatch]]) instead of the general engine. Null entries
+    * mean "needs the general engine"; same cap discipline as the selector
     * cache. */
   private val compoundCache =
     new ConcurrentHashMap[String, Array[Array[graft.selector.Simple]]]()
@@ -227,51 +218,12 @@ object Extractor extends Serializable {
     val hit = compoundCache.get(selStr)
     if (hit != null) return if (hit.length == 0) null else hit
     val computed = compiled(selStr) match {
-      case Right(sel) => simpleCompounds(sel)
+      case Right(sel) => Engine.descendantCompounds(sel)
       case _ => null
     }
     if (compoundCache.size < SelectorCacheCap)
       compoundCache.putIfAbsent(selStr, if (computed == null) NoCompounds else computed)
     computed
-  }
-
-  @inline private def matchesCompound(doc: VDoc, c: Int,
-      simples: Array[graft.selector.Simple]): Boolean = {
-    var all = true
-    var si = 0
-    while (all && si < simples.length) {
-      all = graft.query.Engine.matchOne(doc, c, simples(si))
-      si += 1
-    }
-    all
-  }
-
-  @inline private def matchesAnyCompound(doc: VDoc, c: Int,
-      compounds: Array[Array[graft.selector.Simple]]): Boolean = {
-    var pi = 0
-    while (pi < compounds.length) {
-      if (matchesCompound(doc, c, compounds(pi))) return true
-      pi += 1
-    }
-    false
-  }
-
-  /** the fused fast path of extract_text/attrs/count: find()'s doc-order
-    * union-with-dedup over simple comma groups IS one doc-order walk
-    * testing each element once (nested matches included, exactly like the
-    * general engine). Calls `hit` on every element below `node` that
-    * matches any of `compounds`, in document order. */
-  private def forEachMatch(doc: VDoc, compounds: Array[Array[graft.selector.Simple]],
-      node: Int)(hit: Int => Unit): Unit = {
-    val a = doc.arena
-    var c = a.firstChild(node)
-    while (c >= 0) {
-      if (a.kind(c) == a.ELEM) {
-        if (matchesAnyCompound(doc, c, compounds)) hit(c)
-        forEachMatch(doc, compounds, c)(hit)
-      }
-      c = a.nextSib(c)
-    }
   }
 
   /** pick the recipe's main-content element set after boilerplate removal;
@@ -296,11 +248,11 @@ object Extractor extends Serializable {
         var c = a.firstChild(node)
         while (c >= 0) {
           if (a.kind(c) == a.ELEM) {
-            if (matchesAnyCompound(doc, c, strip)) toRemove += c
+            if (Engine.matchesAnyCompound(doc, c, strip)) toRemove += c
             else {
               var i = 0
               while (i < cands.length) {
-                if (firstMatch(i) < 0 && matchesCompound(doc, c, cands(i))) firstMatch(i) = c
+                if (firstMatch(i) < 0 && Engine.matchesCompound(doc, c, cands(i))) firstMatch(i) = c
                 i += 1
               }
               if (a.firstChild(c) >= 0) rec(c)
@@ -456,7 +408,7 @@ object Extractor extends Serializable {
       ub.reset()
       if (compounds != null) {
         val a = doc.arena
-        forEachMatch(doc, compounds, 0)(c => a.textUtf8Exact(c, ub))
+        Engine.forEachMatch(doc, compounds, 0, c => a.textUtf8Exact(c, ub))
       } else compiled(selStr) match {
         case Left(_) => return null
         case Right(sel) =>
@@ -557,9 +509,8 @@ object Extractor extends Serializable {
       if (compounds != null) {
         // only matched elements' attr values materialize
         val out = new scala.collection.mutable.ArrayBuffer[String](8)
-        forEachMatch(doc, compounds, 0) { c =>
-          new graft.query.Elems(doc, Array(c)).attr(attrName).foreach(v => out += v.value)
-        }
+        Engine.forEachMatch(doc, compounds, 0,
+          c => new graft.query.Elems(doc, Array(c)).attr(attrName).foreach(v => out += v.value))
         attrsToArrayData(out.toArray)
       } else attrsToArrayData(extractAttrsFrom(doc, selStr, attrName))
     } catch {
@@ -588,7 +539,7 @@ object Extractor extends Serializable {
       val compounds = compiledCompounds(selStr)
       if (compounds != null) {
         var count = 0L
-        forEachMatch(doc, compounds, 0)(_ => count += 1)
+        Engine.forEachMatch(doc, compounds, 0, _ => count += 1)
         java.lang.Long.valueOf(count)
       } else compiled(selStr) match {
         case Left(_) => null

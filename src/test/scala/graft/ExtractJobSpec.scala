@@ -79,6 +79,38 @@ class ExtractJobSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(lineage.agg(sum("failure_count")).head().getLong(0) == 0L)
   }
 
+  test("text and url are written without dictionary pages; rows are unchanged") {
+    val out = java.nio.file.Files.createTempDirectory("graft-dict").toString
+    val pages = PagesGen.asDataFrame(spark, sfDir)
+    ExtractJob.run(spark, pages, out, ExtractJob.Config(buckets = 2, runId = "dict"))
+    val conf = spark.sparkContext.hadoopConfiguration
+    val files = new java.io.File(s"$out/extracted").listFiles()
+      .filter(f => f.isDirectory && f.getName.startsWith("bucket="))
+      .flatMap(_.listFiles().filter(_.getName.endsWith(".parquet")))
+    assert(files.length == 2)
+    files.foreach { f =>
+      val in = org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
+        new org.apache.hadoop.fs.Path(f.getAbsolutePath), conf)
+      val reader = org.apache.parquet.hadoop.ParquetFileReader.open(in)
+      try {
+        import scala.jdk.CollectionConverters._
+        val chunks = reader.getFooter.getBlocks.asScala.flatMap(_.getColumns.asScala)
+          .groupBy(_.getPath.toDotString)
+        Seq("text", "url").foreach { c =>
+          assert(chunks(c).nonEmpty && chunks(c).forall(!_.hasDictionaryPage),
+            s"${f.getName}: column $c has a dictionary page")
+        }
+        // the options are per column: the others keep their dictionary
+        assert(chunks("html_bytes").forall(_.hasDictionaryPage), s"${f.getName}: html_bytes lost its dictionary")
+      } finally reader.close()
+    }
+    val extracted = spark.read.parquet(s"$out/extracted")
+    val expect = pages.select(col("url"), col("text").as("expect"))
+    assert(extracted.count() == pages.count())
+    assert(extracted.join(expect, "url").where(!(col("text") <=> col("expect"))).count() == 0)
+    assert(extracted.where(col("failed")).count() == 0)
+  }
+
   test("resume skips completed buckets and stays exactly-once") {
     val out = java.nio.file.Files.createTempDirectory("graft-resume").toString
     val pages = PagesGen.asDataFrame(spark, sfDir)
