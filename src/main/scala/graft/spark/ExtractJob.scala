@@ -1,17 +1,27 @@
 package graft.spark
 
+import org.apache.hadoop.conf.Configuration
+import org.apache.hadoop.fs.Path
+import org.apache.hadoop.mapreduce.{Job, TaskAttemptID, TaskType}
+import org.apache.hadoop.mapreduce.task.TaskAttemptContextImpl
 import org.apache.spark.sql.{DataFrame, Dataset, Encoders, SaveMode, SparkSession}
+import org.apache.spark.sql.catalyst.encoders.encoderFor
+import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.util.AccumulatorV2
 import org.apache.spark.sql.functions._
 import java.sql.Timestamp
+import java.nio.charset.StandardCharsets.UTF_8
 
+/** A row of the extracted table as the extraction emits it. `text` is the
+  * UTF-8 of the table's STRING column (null for a failed row); the write
+  * casts it, which wraps the bytes as they are. */
 final case class ExtractedRow(
     bucket: Int,
     url: String,
     warc_ts: Timestamp,
     html_bytes: Long,
     failed: Boolean,
-    text: String)
+    text: Array[Byte])
 
 final case class LineageRow(
     partition_id: Int,
@@ -64,7 +74,7 @@ private[spark] object BucketStats {
   * writer; `value(b)` is null for a bucket that saw no row. Bucket ids
   * index the array directly (`bucketCol` yields `[0, buckets)`). */
 private[spark] final class LineageAccumulator(buckets: Int)
-    extends AccumulatorV2[ExtractedRow, Array[BucketStats]] {
+    extends AccumulatorV2[(Int, Timestamp, Long, Boolean), Array[BucketStats]] {
   private val stats = new Array[BucketStats](buckets)
 
   def isZero: Boolean = stats.forall(_ == null)
@@ -76,13 +86,16 @@ private[spark] final class LineageAccumulator(buckets: Int)
   override def copyAndReset(): LineageAccumulator = new LineageAccumulator(buckets)
   def reset(): Unit = stats.indices.foreach(stats(_) = null)
 
-  def add(r: ExtractedRow): Unit = {
-    var s = stats(r.bucket)
-    if (s == null) { s = new BucketStats; stats(r.bucket) = s }
-    s.add(r.warc_ts, r.html_bytes, r.failed)
+  /** the row path's entry: no tuple per row */
+  def add(bucket: Int, ts: Timestamp, htmlBytes: Long, failed: Boolean): Unit = {
+    var s = stats(bucket)
+    if (s == null) { s = new BucketStats; stats(bucket) = s }
+    s.add(ts, htmlBytes, failed)
   }
 
-  def merge(other: AccumulatorV2[ExtractedRow, Array[BucketStats]]): Unit = {
+  def add(r: (Int, Timestamp, Long, Boolean)): Unit = add(r._1, r._2, r._3, r._4)
+
+  def merge(other: AccumulatorV2[(Int, Timestamp, Long, Boolean), Array[BucketStats]]): Unit = {
     val o = other.value
     for (b <- 0 until buckets if o(b) != null) {
       if (stats(b) == null) stats(b) = new BucketStats
@@ -115,11 +128,23 @@ private[spark] final class LineageAccumulator(buckets: Int)
   *    dynamic partition overwrite makes re-extraction of a half-written
   *    bucket idempotent. ([[StreamingExtract.startWithLineage]] keeps a
   *    read-back instead: a replayed micro-batch would count twice.)
+  *    The lineage rows are written after the extracted commit, on the
+  *    driver, with Spark's own parquet writer (`ParquetFileFormat`'s
+  *    `OutputWriterFactory`: codec, timestamp type and footer from the
+  *    session conf, as a Spark write gives them) into one hidden
+  *    `_tmp.`-prefixed file under `lineage/`, then renamed to `part-…`.
+  *    Spark's file listing skips `_`-prefixed names, so a crash before the
+  *    rename leaves nothing that reads or resume see. No Spark job runs for
+  *    it, and `lineage/` gets no `_SUCCESS` marker.
   *  - **per-row engine, zero per-row allocation churn**: `mapPartitions`
-  *    with the thread-local arena in [[Extractor]]. Every per-row failure
-  *    (parse error, pathological input, a stack overflow on a deep page,
-  *    null timestamp) yields a null-text row counted in `failure_count` —
-  *    never a task failure ([[Extractor.extractMainOrNull]]).
+  *    with the thread-local arena in [[Extractor]]. The main text goes from
+  *    the arena to the row as UTF-8 bytes, the same bytes `extract_main`
+  *    gives, with no UTF-16 String between
+  *    ([[Extractor.extractMainUtf8OrNull]]); `clean = true` cleans the
+  *    String and encodes it. Every per-row failure (parse error,
+  *    pathological input, a stack overflow on a deep page, null timestamp)
+  *    yields a null-text row counted in `failure_count` — never a task
+  *    failure.
   *  - **local output**: both writes carry [[NioLocalFileSystem.WriteOptions]],
   *    so on `file:` paths permissions are set in-process instead of by one
   *    forked `chmod` per created file and directory; other schemes ignore
@@ -238,20 +263,23 @@ object ExtractJob {
       .mapPartitions { it =>
         it.map { case (b, url, ts, html) =>
           val bytes = if (html == null) 0L else html.length.toLong
-          val raw = Extractor.extractMainOrNull(html, recipe)
           val text =
-            if (raw == null || !doClean) raw
-            else TextNorm.scrubPii(TextNorm.fixText(raw))
-          val row = ExtractedRow(b, url, ts, bytes, text == null, text)
-          lineage.add(row)
-          row
+            if (!doClean) Extractor.extractMainUtf8OrNull(html, recipe)
+            else {
+              val raw = Extractor.extractMainOrNull(html, recipe)
+              if (raw == null) null
+              else TextNorm.scrubPii(TextNorm.fixText(raw)).getBytes(UTF_8)
+            }
+          lineage.add(b, ts, bytes, text == null)
+          ExtractedRow(b, url, ts, bytes, text == null, text)
         }
       }(rowEnc)
 
     // idempotent per-bucket overwrite => exactly-once on resume; a zero-row
     // write touches no partition. parquet.block.size bounds row groups so
-    // each bucket file stays splittable (see Config.rowGroupBytes)
-    extracted.toDF()
+    // each bucket file stays splittable (see Config.rowGroupBytes). The
+    // BINARY -> STRING cast is `UTF8String.fromBytes`: the bytes as they are
+    extracted.withColumn("text", col("text").cast("string"))
       .write
       .options(NioLocalFileSystem.WriteOptions)
       .partitionBy("bucket")
@@ -267,10 +295,34 @@ object ExtractJob {
       LineageRow(b, s.tsMin, s.tsMax, s.docs, s.bytes, s.failures,
         "done", cfg.runId, cfg.buckets, cfg.salt)
     }.toSeq
-    if (rows.nonEmpty)
-      spark.createDataset(rows)(lineageEnc).coalesce(1).write
-        .options(NioLocalFileSystem.WriteOptions)
-        .mode(SaveMode.Append).parquet(lineagePath)
+    if (rows.nonEmpty) appendLineage(spark, lineagePath, rows)
+  }
+
+  /** Appends `rows` to the lineage table at `dir` as one parquet file,
+    * written on the driver with the writer a Spark parquet write uses: the
+    * Hadoop conf is built as a write's is (the session's SQL conf over the
+    * context's Hadoop conf, then [[NioLocalFileSystem.WriteOptions]]), and
+    * `prepareWrite` takes codec, timestamp type and footer metadata from
+    * the session conf. The file is written under a `_tmp.` name, which
+    * Spark's file listing skips, and renamed into place once closed. */
+  private[spark] def appendLineage(spark: SparkSession, dir: String, rows: Seq[LineageRow]): Unit = {
+    val conf = new Configuration(spark.sparkContext.hadoopConfiguration)
+    spark.conf.getAll.foreach { case (k, v) => if (v != null) conf.set(k, v) }
+    NioLocalFileSystem.WriteOptions.foreach { case (k, v) => conf.set(k, v) }
+    val job = Job.getInstance(conf)
+    val factory = new ParquetFileFormat().prepareWrite(spark, job, Map.empty, lineageSchema)
+    val ctx = new TaskAttemptContextImpl(job.getConfiguration,
+      new TaskAttemptID("lineage", 0, TaskType.MAP, 0, 0))
+    val name = s"part-00000-${java.util.UUID.randomUUID()}-c000${factory.getFileExtension(ctx)}"
+    val tmp = new Path(dir, s"_tmp.$name")
+    val writer = factory.newInstance(tmp.toString, lineageSchema, ctx)
+    try {
+      val toRow = encoderFor(lineageEnc).createSerializer()
+      rows.foreach(r => writer.write(toRow(r)))
+    } finally writer.close()
+    val fs = tmp.getFileSystem(job.getConfiguration)
+    if (!fs.rename(tmp, new Path(dir, name)))
+      throw new java.io.IOException(s"could not rename $tmp to $name")
   }
 
   /** spark-submit entry:

@@ -354,20 +354,30 @@ object Extractor extends Serializable {
     }
   }
 
-  // the two output forms, as values: no per-row closure allocation
+  // the output forms, as values: no per-row closure allocation
   private val mainText: (VDoc, Elems) => String = (_, main) => main.text()
-  private val mainUtf8: (VDoc, Elems) => org.apache.spark.unsafe.types.UTF8String = (doc, main) => {
+  private val mainBytes: (VDoc, Elems) => Array[Byte] = (doc, main) => {
     val ub = outBuilder()
     ub.reset()
-    main.ids.foreach(e => doc.arena.textUtf8Exact(e, ub))
-    org.apache.spark.unsafe.types.UTF8String.fromBytes(ub.toBytes)
+    val ids = main.ids
+    var i = 0
+    while (i < ids.length) { doc.arena.textUtf8Exact(ids(i), ub); i += 1 }
+    ub.toBytes
   }
+  private val mainUtf8: (VDoc, Elems) => org.apache.spark.unsafe.types.UTF8String =
+    (doc, main) => org.apache.spark.unsafe.types.UTF8String.fromBytes(mainBytes(doc, main))
 
   /** [[extractMain]] behind the same row guard as [[extractMainCodegen]]:
     * null on ANY per-row failure, a stack overflow included. The row path
-    * of [[ExtractJob]]. */
+    * of [[ExtractJob]] with `clean = true`. */
   def extractMainOrNull(html: Array[Byte], recipe: Recipe): String =
     guardedMain(html, recipe, crawl = false, mainText)
+
+  /** [[extractMainOrNull]] as the UTF-8 of its String, built straight from
+    * the arena's bytes as `extract_main` builds them: the row path of
+    * [[ExtractJob]]. */
+  def extractMainUtf8OrNull(html: Array[Byte], recipe: Recipe): Array[Byte] =
+    guardedMain(html, recipe, crawl = false, mainBytes)
 
   /** hot path: bytes in, UTF-8 bytes out — no UTF-16 String round trip. */
   def extractMainCodegen(html: Array[Byte]): org.apache.spark.unsafe.types.UTF8String =

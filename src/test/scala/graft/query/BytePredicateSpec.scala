@@ -4,8 +4,10 @@ import java.nio.charset.StandardCharsets.UTF_8
 import scala.collection.mutable.ArrayBuffer
 import org.apache.spark.sql.{Row, SparkSession}
 import org.apache.spark.sql.types.{BinaryType, IntegerType, StringType, StructField, StructType}
+import org.scalactic.Prettifier
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
+import graft.Esc
 import graft.dom.Arena
 import graft.selector.{Selector, Simple}
 import graft.spark.Extractor
@@ -21,6 +23,13 @@ import graft.spark.Extractor
   * empty and boolean attributes, upper-case keys, and `*-of-type` over
   * mixed-case, non-ASCII and malformed tag names. */
 class BytePredicateSpec extends AnyFunSuite with BeforeAndAfterAll {
+
+  // operands, texts and selectors hold unpaired surrogates: failure
+  // messages print them escaped (`graft.Esc`), the clues below and the
+  // values `assert` quotes alike, so a failure is reported per test
+  private implicit val escaped: Prettifier = new Prettifier {
+    def apply(o: Any): String = Esc(Prettifier.default(o))
+  }
 
   // ================= oracle: the String predicates =================
 
@@ -103,7 +112,7 @@ class BytePredicateSpec extends AnyFunSuite with BeforeAndAfterAll {
           val my = a.lowerName(e)
           !elementChildren(a, a.parent(e)).exists(c => c != e && a.lowerName(c) == my)
         }
-      case other => fail(s"no oracle for $other")
+      case other => fail(Esc(s"no oracle for $other"))
     }
 
     def compound(a: Arena, e: Int, simples: List[Simple]): Boolean = simples.forall(simple(a, e, _))
@@ -233,12 +242,12 @@ class BytePredicateSpec extends AnyFunSuite with BeforeAndAfterAll {
   /** parse through the thread arena, as the SQL entries do */
   private def load(name: String, html: Array[Byte], renamed: Boolean = true): VDoc = {
     val doc = Extractor.parseBytes(html)
-    assert(doc != null, s"$name does not parse")
+    assert(doc != null, Esc(s"$name does not parse"))
     if (renamed && name == "types") rename(doc.arena)
     doc
   }
 
-  private def parseSel(s: String): Selector = Selector.parse(s).fold(e => fail(s"$s: $e"), identity)
+  private def parseSel(s: String): Selector = Selector.parse(s).fold(e => fail(Esc(s"$s: $e")), identity)
 
   // ================= API differential =================
 
@@ -251,7 +260,7 @@ class BytePredicateSpec extends AnyFunSuite with BeforeAndAfterAll {
         for (p <- parseSel(s).process; simple <- p.query.head.simples if !Engine.isPositional(simple))
           elems.foreach { e =>
             assert(Engine.matchOne(doc, e, simple) == Oracle.simple(a, e, simple),
-              s"$name: matchOne($simple) on <${a.lowerName(e)}> #$e")
+              Esc(s"$name: matchOne($simple) on <${a.lowerName(e)}> #$e"))
           }
       }
     }
@@ -266,11 +275,11 @@ class BytePredicateSpec extends AnyFunSuite with BeforeAndAfterAll {
       sels.foreach { s =>
         val sel = parseSel(s)
         val want = Oracle.find(a, sel)
-        assert(root.find(s).ids.toSeq == want, s"$name: find($s)")
-        assert(all.filter(s).ids.toSeq == want, s"$name: filter($s)")
-        assert(all.not(s).ids.toSeq == all.ids.toSeq.filterNot(want.toSet), s"$name: not($s)")
+        assert(root.find(s).ids.toSeq == want, Esc(s"$name: find($s)"))
+        assert(all.filter(s).ids.toSeq == want, Esc(s"$name: filter($s)"))
+        assert(all.not(s).ids.toSeq == all.ids.toSeq.filterNot(want.toSet), Esc(s"$name: not($s)"))
         val hasWant = all.ids.toSeq.filter(e => want.exists(x => a.isAncestor(e, x)))
-        assert(all.has(s).ids.toSeq == hasWant, s"$name: has($s)")
+        assert(all.has(s).ids.toSeq == hasWant, Esc(s"$name: has($s)"))
       }
     }
   }
@@ -347,9 +356,9 @@ class BytePredicateSpec extends AnyFunSuite with BeforeAndAfterAll {
         s"extract_attrs($col, sel, attr)").collect().map(r => r.getInt(0) -> r).toMap
       expected.foreach { case (id, name, _, s, _, cnt, text, attrs) =>
         val r = got(id)
-        assert(r.getLong(1) == cnt, s"$col $name: extract_count($s)")
-        assert(r.getString(2) == text, s"$col $name: extract_text($s)")
-        assert(r.getSeq[String](3).toSeq == attrs, s"$col $name: extract_attrs($s)")
+        assert(r.getLong(1) == cnt, Esc(s"$col $name: extract_count($s)"))
+        assert(r.getString(2) == text, Esc(s"$col $name: extract_text($s)"))
+        assert(r.getSeq[String](3).toSeq == attrs, Esc(s"$col $name: extract_attrs($s)"))
       }
     }
   }
