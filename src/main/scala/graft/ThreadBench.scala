@@ -21,7 +21,7 @@ object ThreadBench {
     val bytes = pages.map(_.length.toLong).sum
     println(s"pages=${pages.length} bytes=$bytes")
     // measures the PRODUCTION path — extractMainCodegen is the static entry
-    // the extract_main Catalyst expression calls (UTF-8 in, UTF-8 out);
+    // SQL extract_main calls on BINARY input (UTF-8 in, UTF-8 out);
     // extractMain(String-out) adds a UTF-16 materialization the SQL path
     // never pays (~13% per the round-3 JFR)
     def run(threads: Int): Double = {

@@ -455,13 +455,15 @@ object CharsetOps {
 
   // ------------------------------------------------------ codegen facade
 
-  /** `charset_of(html, content_type)` body: ct may be null (absent). */
+  /** `charset_of(html, content_type)` body: either may be null (a null
+    * html gives null, from `sniff`). */
   def sniffCodegen(html: Array[Byte], ct: UTF8String): UTF8String = {
     val s = sniff(html, if (ct == null) null else ct.toString)
     if (s == null) null else UTF8String.fromString(s)
   }
 
-  /** `decode_html(html, content_type)` body: ct may be null (absent). */
+  /** `decode_html(html, content_type)` body: either may be null (a null
+    * html gives null, from `toUtf8`). */
   def decodeCodegen(html: Array[Byte], ct: UTF8String): Array[Byte] =
     toUtf8(html, if (ct == null) null else ct.toString)
 }

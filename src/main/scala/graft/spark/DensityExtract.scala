@@ -4,10 +4,6 @@ import graft.dom.{Arena, Entities}
 import graft.html.ParseOptions
 import graft.query.VDoc
 
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.types.{BinaryType, DataType, NullType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Density-based main-content extraction — the selector-free DOM
@@ -158,38 +154,4 @@ object DensityExtract extends Serializable {
 
   def extractCodegen(html: UTF8String): UTF8String =
     if (html == null) null else extractCodegenBinary(html.getBytes)
-}
-
-/** `extract_main_density(html)` — selector-free block/link-density
-  * main-content extraction; STRING or BINARY html, NULL-tolerant. */
-case class ExtractMainDensity(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = StringType
-  override def nullable: Boolean = true
-  override def prettyName: String = "extract_main_density"
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (child.dataType == StringType || child.dataType == BinaryType ||
-      child.dataType == NullType)
-      TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"extract_main_density: html must be STRING or BINARY, got ${child.dataType.sql}")
-
-  private val htmlIsBinary: Boolean = child.dataType == BinaryType
-
-  override def nullSafeEval(html: Any): Any =
-    if (htmlIsBinary) DensityExtract.extractCodegenBinary(html.asInstanceOf[Array[Byte]])
-    else DensityExtract.extractCodegen(html.asInstanceOf[UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val fn = if (htmlIsBinary) "extractCodegenBinary" else "extractCodegen"
-    nullSafeCodeGen(ctx, ev, h => {
-      s"""
-         |${ev.value} = graft.spark.DensityExtract.$fn($h);
-         |${ev.isNull} = ${ev.value} == null;
-       """.stripMargin
-    })
-  }
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
 }

@@ -309,7 +309,7 @@ object Extractor extends Serializable {
     }
   }
 
-  /** static entry used from generated code (ExtractText.doGenCode).
+  /** `extract_text` static entry, called from generated code.
     * Defensive like every BINARY entry: ANY per-row failure yields null —
     * the same bytes must have the same fate whether the column is STRING
     * or BINARY. */

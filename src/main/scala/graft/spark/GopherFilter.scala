@@ -1,11 +1,8 @@
 package graft.spark
 
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
-import org.apache.spark.sql.types.{BooleanType, DataType, DoubleType, LongType, NullType, StringType, StructField, StructType}
+import org.apache.spark.sql.types.{BooleanType, DoubleType, LongType, StructField, StructType}
 import org.apache.spark.unsafe.types.UTF8String
 
 /** The Gopher quality-filter rule set (Rae et al. 2021, appendix A1.1) —
@@ -18,8 +15,8 @@ import org.apache.spark.unsafe.types.UTF8String
   * be training data. Composes with [[Repetition]] (the same paper's
   * repetitiousness rules) via [[TextOps.gopherQuality]].
   *
-  * One pass per row, bounded by the row's own size; a native codegen'd
-  * Catalyst expression (`gopher_quality(text)`), never a UDF.
+  * One pass per row, bounded by the row's own size; `gopher_quality(text)`
+  * lowers to one static call in generated code, never a UDF.
   *
   * Exact definitions (pinned by the DuckDB oracle + GopherSpec):
   *  - *words*: maximal runs of non-whitespace; lengths in codepoints.
@@ -156,33 +153,4 @@ object GopherFilter extends Serializable {
     StructField("alpha_word_frac", DoubleType, nullable = false),
     StructField("stopword_hits", LongType, nullable = false),
     StructField("passes", BooleanType, nullable = false)))
-}
-
-/** `gopher_quality(text)` → STRUCT<word_count, mean_word_len,
-  * symbol_word_ratio, bullet_line_frac, ellipsis_line_frac,
-  * alpha_word_frac, stopword_hits, passes> — see [[GopherFilter]]. */
-case class GopherQuality(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = GopherFilter.schema
-  override def nullable: Boolean = true
-  override def prettyName: String = "gopher_quality"
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (child.dataType == StringType || child.dataType == NullType)
-      TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"gopher_quality: text must be STRING, got ${child.dataType.sql}")
-
-  override def nullSafeEval(text: Any): Any =
-    GopherFilter.signalsCodegen(text.asInstanceOf[UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, t => {
-      s"""
-         |${ev.value} = graft.spark.GopherFilter.signalsCodegen($t);
-         |${ev.isNull} = ${ev.value} == null;
-       """.stripMargin
-    })
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
 }

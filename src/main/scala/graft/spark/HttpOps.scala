@@ -10,7 +10,7 @@ import java.util.Locale
   * RFC 9111 §4.2 freshness computation that turns response headers into
   * "seconds until this page is worth refetching" — the signal a crawl
   * scheduler sorts its frontier by. Everything is null-tolerant scalar
-  * work (codegen'd via [[HttpExpr]]); garbage headers yield SQL NULL or
+  * work (codegen'd through [[GraftSparkExtensions]]); garbage headers yield SQL NULL or
   * the spec's already-expired zero, never an exception. */
 object HttpOps extends Serializable {
 

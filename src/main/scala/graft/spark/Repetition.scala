@@ -1,11 +1,8 @@
 package graft.spark
 
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
-import org.apache.spark.sql.types.{DataType, DoubleType, NullType, StringType, StructField, StructType}
+import org.apache.spark.sql.types.{DoubleType, StructField, StructType}
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Repetition signals — the Gopher-rule (Rae et al. 2021, §A1.1) text
@@ -14,8 +11,8 @@ import org.apache.spark.unsafe.types.UTF8String
   * section, SEO keyword stuffing) shows up here as duplicate lines /
   * paragraphs / dominant n-grams long before a language model sees it.
   *
-  * One pass per row, bounded by the row's own size; computed as a native
-  * codegen'd Catalyst expression (`repetition_signals(text)`), never a UDF.
+  * One pass per row, bounded by the row's own size; `repetition_signals(text)`
+  * lowers to one static call in generated code, never a UDF.
   *
   * Exact definitions (pinned by the DuckDB oracle + RepetitionSpec):
   *  - *lines*: `text` split on `'\n'`; zero-length lines are excluded
@@ -161,33 +158,4 @@ object Repetition extends Serializable {
     StructField("dup_para_frac", DoubleType, nullable = false),
     StructField("dup_para_char_frac", DoubleType, nullable = false),
     StructField("top_bigram_char_frac", DoubleType, nullable = false)))
-}
-
-/** `repetition_signals(text)` →
-  * STRUCT<dup_line_frac, dup_line_char_frac, dup_para_frac,
-  * dup_para_char_frac, top_bigram_char_frac> — see [[Repetition]]. */
-case class RepetitionSignals(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = Repetition.schema
-  override def nullable: Boolean = true
-  override def prettyName: String = "repetition_signals"
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (child.dataType == StringType || child.dataType == NullType)
-      TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"repetition_signals: text must be STRING, got ${child.dataType.sql}")
-
-  override def nullSafeEval(text: Any): Any =
-    Repetition.signalsCodegen(text.asInstanceOf[UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, t => {
-      s"""
-         |${ev.value} = graft.spark.Repetition.signalsCodegen($t);
-         |${ev.isNull} = ${ev.value} == null;
-       """.stripMargin
-    })
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
 }

@@ -3,10 +3,6 @@ package graft.spark
 import java.nio.charset.{CharacterCodingException, Charset, CodingErrorAction}
 import java.nio.ByteBuffer
 
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.types.{DataType, NullType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Text normalization / mojibake repair — the ftfy-class cleanup pass a
@@ -39,8 +35,8 @@ import org.apache.spark.unsafe.types.UTF8String
   *     and the C1 range U+0080–U+009F are removed (crawl-payload noise
   *     and misdecode residue; never meaningful in text).
   *
-  * One scalar pass per row, bounded by the row's own size; a native
-  * codegen'd Catalyst expression, never a UDF. NULL → NULL. */
+  * One scalar pass per row, bounded by the row's own size; one static call in
+  * generated code, never a UDF. NULL → NULL. */
 object TextNorm extends Serializable {
 
   private val Utf8 = Charset.forName("UTF-8")
@@ -284,73 +280,4 @@ object TextNorm extends Serializable {
       case scala.util.control.NonFatal(_) => text
     }
   }
-}
-
-/** `fix_text(text)` — mojibake repair + NFC + control strip; see
-  * [[TextNorm]]. */
-case class FixText(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = StringType
-  override def nullable: Boolean = true
-  override def prettyName: String = "fix_text"
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (child.dataType == StringType || child.dataType == NullType)
-      TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"fix_text: text must be STRING, got ${child.dataType.sql}")
-
-  override def nullSafeEval(text: Any): Any =
-    TextNorm.fixTextCodegen(text.asInstanceOf[UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, t => s"graft.spark.TextNorm.fixTextCodegen($t)")
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
-/** `scrub_cards(text)` — Luhn-gated card-number redaction; see
-  * [[TextNorm.scrubCards]]. */
-case class ScrubCards(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = StringType
-  override def nullable: Boolean = true
-  override def prettyName: String = "scrub_cards"
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (child.dataType == StringType || child.dataType == NullType)
-      TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"scrub_cards: text must be STRING, got ${child.dataType.sql}")
-
-  override def nullSafeEval(text: Any): Any =
-    TextNorm.scrubCardsCodegen(text.asInstanceOf[UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, t => s"graft.spark.TextNorm.scrubCardsCodegen($t)")
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
-/** `scrub_pii(text)` — email / IPv4 / phone redaction; see
-  * [[TextNorm.scrubPii]]. */
-case class ScrubPii(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = StringType
-  override def nullable: Boolean = true
-  override def prettyName: String = "scrub_pii"
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (child.dataType == StringType || child.dataType == NullType)
-      TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"scrub_pii: text must be STRING, got ${child.dataType.sql}")
-
-  override def nullSafeEval(text: Any): Any =
-    TextNorm.scrubPiiCodegen(text.asInstanceOf[UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, t => s"graft.spark.TextNorm.scrubPiiCodegen($t)")
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
 }

@@ -422,7 +422,7 @@ object UrlOps {
   }
 
   // ------------------------------------------------- codegen static entries
-  // called from generated code (UrlExpr); null in -> null out, never throws.
+  // called from generated code (GraftSparkExtensions); null in -> null out, never throws.
 
   import org.apache.spark.unsafe.types.UTF8String
 

@@ -467,27 +467,36 @@ class ExtractJobSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("interpreted eval == codegen entries (incl. invalid UTF-8 BINARY); wrong arity is a clean error") {
-    import org.apache.spark.sql.catalyst.expressions.Literal
+    import org.apache.spark.sql.catalyst.FunctionIdentifier
+    import org.apache.spark.sql.catalyst.expressions.{Expression, Literal, RuntimeReplaceable}
     import org.apache.spark.sql.types.{BinaryType, StringType}
     import org.apache.spark.unsafe.types.UTF8String
-    import graft.spark.{ExtractAttrs, ExtractCount, Extractor}
+    import graft.spark.Extractor
     // invalid UTF-8 in the middle: a String round-trip would substitute
     // U+FFFD and diverge from the byte-native parse
     val bad = "<a href=\"/x\">1</a><a href=\"/".getBytes("UTF-8") ++
       Array[Byte](0xC3.toByte, 0x28.toByte) ++ "\">2</a>".getBytes("UTF-8")
     def lit(v: Any, t: org.apache.spark.sql.types.DataType) = Literal.create(v, t)
+    // the call the session's registry builds for SQL, evaluated the way
+    // the interpreted path runs it: RuntimeReplaceable.eval throws, so
+    // through its replacement
+    val registry = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+      .sessionState.functionRegistry
+    def interp(name: String, args: Expression*): Any =
+      registry.lookupFunction(FunctionIdentifier(name), args)
+        .asInstanceOf[RuntimeReplaceable].replacement.eval(null)
     val sel = UTF8String.fromString("a")
     val attr = UTF8String.fromString("href")
-    val interpAttrs = ExtractAttrs(lit(bad, BinaryType),
-      lit(sel, StringType), lit(attr, StringType)).eval(null)
+    val interpAttrs = interp("extract_attrs", lit(bad, BinaryType),
+      lit(sel, StringType), lit(attr, StringType))
     val codegenAttrs = Extractor.extractAttrsCodegenBinary(bad, sel, attr)
     assert(interpAttrs.toString == codegenAttrs.toString,
       "interpreted BINARY extract_attrs diverged from the byte-native entry")
-    val interpCount = ExtractCount(lit(bad, BinaryType), lit(sel, StringType)).eval(null)
+    val interpCount = interp("extract_count", lit(bad, BinaryType), lit(sel, StringType))
     assert(interpCount == Extractor.extractCountCodegenBinary(bad, sel).longValue())
     // interpreted path inherits the NonFatal->null contract (bad selector)
-    assert(ExtractCount(lit(bad, BinaryType),
-      lit(UTF8String.fromString(":nope("), StringType)).eval(null) == null)
+    assert(interp("extract_count", lit(bad, BinaryType),
+      lit(UTF8String.fromString(":nope("), StringType)) == null)
     // wrong argument count: a named error, not IndexOutOfBoundsException
     Seq("extract_text('x')", "extract_main()", "extract_attrs('x','a')",
       "extract_count('x')", "extract_html('x')").foreach { call =>
