@@ -4,13 +4,16 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.spark.{ExtractJob, Extractor, PagesGen}
 import scala.collection.mutable
+import scala.util.control.NonFatal
 
 /** Benchmark main (driver contract: ONE JSON line on stdout).
   *
-  * Measures (a) per-query wall time for every `SparkEntry.queries` entry at
-  * `SPARK_GRAFT_CPUS`, and (b) the north-rule scaling evidence: the same
-  * extraction job over the same synthesized pages input at local[2] /
-  * local[8] / local[32] (sandbox stand-in for N -> 4N executors).
+  * Measures (a) per-query wall time for every `SparkEntry.queryTable` row
+  * at `SPARK_GRAFT_CPUS` (a query that throws records -1, is left out of
+  * `total` and is named in `failed_queries`), and (b) the north-rule
+  * scaling evidence: the same extraction job over the same synthesized
+  * pages input at local[2] / local[8] / local[32] (sandbox stand-in for
+  * N -> 4N executors).
   *
   * Measurement protocol (round 3, fixed — no result-conditioned control
   * flow anywhere): a FIXED, INTERLEAVED trial schedule. `TRIALS` visits per
@@ -128,14 +131,18 @@ object Bench {
 
     // ---- per-query timings at the configured parallelism ----
     val spark = newSession(cpus)
-    val queries: Map[String, Double] =
+    val queries: Seq[(String, Double)] =
       try {
-        SparkEntry.queries.map { case (name, fn) =>
+        SparkEntry.queryTable.map { spec =>
           // median-of-3, fixed count: absorbs bursty hypervisor steal windows
           val sec =
-            try median(Seq.fill(3)(time(force(fn(spark, sfDir)))))
-            catch { case _: Throwable => -1.0 }
-          name -> sec
+            try median(Seq.fill(3)(time(force(spec.body(spark, sfDir)))))
+            catch {
+              case NonFatal(e) =>
+                System.err.println(s"[bench] ${spec.name} failed: ${e.getMessage}")
+                -1.0
+            }
+          spec.name -> sec
         }
       } finally spark.stop()
 
@@ -143,16 +150,18 @@ object Bench {
       .map { case (k, v) => "\"" + k + "\":" + f"$v%.3f" }
       .mkString("{", ",", "}")
     def arr(lvl: Int): String = trials(lvl).map(t => f"$t%.3f").mkString("[", ",", "]")
-    val total = queries.values.filter(_ >= 0).sum
+    val total = queries.map(_._2).filter(_ >= 0).sum
+    val failed = queries.collect { case (name, sec) if sec < 0 => name }
     // the two index-LIFECYCLE rows (build + append(s) + compact + probe,
     // ~15 Spark job submissions each) are fixed scheduling/small-file
     // overhead at bench scale — split out so the query total stays
     // comparable across rounds while the lifecycle cost stays visible
     val lifecycle = Set("q_ann_append_idx", "q_ann_compact_idx")
-    val lifecycleSec = queries.filter(q => lifecycle(q._1) && q._2 >= 0).values.sum
+    val lifecycleSec = queries.filter(q => lifecycle(q._1) && q._2 >= 0).map(_._2).sum
     // shared headline fields (stdout contract line AND file copy)
     val core =
       f"""{"metric":"total","value":$total%.3f,"unit":"sec","queries":$qs%s,""" +
+        f""""failed_queries":${failed.sorted.map("\"" + _ + "\"").mkString("[", ",", "]")}%s,""" +
         f""""lifecycle_rows":${lifecycle.toSeq.sorted.map("\"" + _ + "\"").mkString("[", ",", "]")}%s,""" +
         f""""lifecycle_sec":$lifecycleSec%.3f,"queries_sec_excl_lifecycle":${total - lifecycleSec}%.3f,""" +
         f""""sf":"$sfDir%s",""" +

@@ -1,8 +1,8 @@
 package graft
 import org.apache.spark.sql.{Row, SparkSession}
 import java.nio.file.{Files, Paths}
-/** Driver-run correctness dump: each SparkEntry.queries result → parquet,
-  * plus oracle_sql.json, for the driver's DuckDB compare.
+/** Correctness dump: each `SparkEntry.queryTable` body's result → parquet,
+  * plus oracle_sql.json, for the DuckDB compare (`tools/compare.py`).
   *
   * The run records itself: `<out>/summary.json` maps each query to
   * `{rows, schema, sha, seconds, path}` — row count and schema read back
@@ -11,6 +11,10 @@ import java.nio.file.{Files, Paths}
   * `{error, seconds, path}` when the query failed. The last stdout line is
   * one JSON object: `{"verify": {"queries", "ok", "failed", "seconds",
   * "summary"}}`.
+  *
+  * An old summary.json is deleted at start, and each query's output dir
+  * before that query runs, so a query that fails never leaves an earlier
+  * run's parquet for the compare to read.
   *
   * Usage: `graft.Verify <sfDir> <outDir>`; `SPARK_GRAFT_CPUS` sets the
   * local[N] width (default 4). */
@@ -70,13 +74,17 @@ object Verify {
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
+    val summaryPath = s"$outDir/summary.json"
+    Files.deleteIfExists(Paths.get(summaryPath))
     val t0 = System.nanoTime()
     var failed = 0
-    val summary = SparkEntry.queries.toSeq.map { case (name, fn) =>
+    val summary = SparkEntry.queryTable.map { spec =>
+      val name = spec.name
       val path = s"$outDir/$name"
+      org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(path))
       val start = System.nanoTime()
       val entry = try {
-        fn(spark, sfDir).coalesce(1).write.mode("overwrite").parquet(path)
+        spec.body(spark, sfDir).coalesce(1).write.mode("overwrite").parquet(path)
         val took = seconds(start)
         val (rows, schema, sha) = digest(spark, path)
         s"""{"rows": $rows, "schema": ${q(schema)}, "sha": "$sha", "seconds": $took, "path": ${q(path)}}"""
@@ -94,10 +102,9 @@ object Verify {
       s"${q(name)}: $entry"
     }
     if (failed > 0) System.err.println(s"[verify] $failed quer${if (failed == 1) "y" else "ies"} failed")
-    val json = SparkEntry.oracleSql
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
+    val json = SparkEntry.queryTable
+      .map(spec => s"${q(spec.name)}: ${q(spec.oracleSql)}").mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
-    val summaryPath = s"$outDir/summary.json"
     Files.writeString(Paths.get(summaryPath), summary.mkString("{\n", ",\n", "\n}\n"))
     spark.stop()
     println(s"""{"verify": {"queries": ${summary.length}, "ok": ${summary.length - failed}, "failed": $failed, """ +

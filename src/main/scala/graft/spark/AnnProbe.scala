@@ -14,7 +14,7 @@ private[spark] trait AnnProbeOps extends AnnIndexOps {
     * probed (tbl, sigp) partitions (partition pruning) and skips
     * non-matching row groups via the pushed-down sig filter — O(tables *
     * probes * bucket) rows, not a corpus scan. Public so plan audits
-    * (Plans.scala, TextOpsSpec) can inspect the pruned scan that
+    * (TextOpsSpec) can inspect the pruned scan that
     * [[rankTopK]]'s collect would otherwise hide behind a local relation. */
   def annLshProbeScan(spark: SparkSession, sfDir: String, indexDir: String,
       queryId: Long, radius: Int = 1): DataFrame = {

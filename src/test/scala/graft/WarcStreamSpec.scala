@@ -202,7 +202,7 @@ class WarcStreamSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("q_warc_file gate row matches its closed form on sf0.001") {
-    val df = graft.SparkEntry.queries("q_warc_file")(spark, sfDir)
+    val df = graft.SparkEntry.queryTable.find(_.name == "q_warc_file").get.body(spark, sfDir)
     val rows = df.collect()
     val nPages = spark.read.parquet(s"$sfDir/documents.parquet")
       .select(sum(col("doc_id") % 3 + 1)).head().getLong(0)

@@ -6,6 +6,8 @@ values) against the Spark parquet dumps from graft.Verify.
 Usage: python3 tools/compare.py <verifyOutDir> <sfDir>
 
 One line per query with its DuckDB oracle seconds, flushed as it goes.
+A query is FAIL without a compare when Verify's summary.json has no entry
+for it or records an error: its parquet dir, if any, is not this run's.
 q_pagerank runs last: its oracle (nested per-iteration CTEs) takes longer
 than all the others together. The last line mirrors Verify's summary:
 {"compare": {"queries", "ok", "failed", "seconds"}}."""
@@ -26,10 +28,21 @@ for t in ["documents", "embeddings", "lineitem", "orders", "customer"]:
         pass
 
 oracles = json.load(open(f"{out}/oracle_sql.json"))
+try:
+    summary = json.load(open(f"{out}/summary.json"))
+except FileNotFoundError:
+    print(f"{out}/summary.json missing: every query FAIL", flush=True)
+    summary = {}
 order = sorted(oracles, key=lambda n: (n in SLOW_LAST, n))
 fails = 0
 t_start = time.monotonic()
 for name in order:
+    entry = summary.get(name)
+    if entry is None or "error" in entry:
+        why = "no summary.json entry" if entry is None else f"verify error: {entry['error']}"
+        print(f"{name}: FAIL ({why})", flush=True)
+        fails += 1
+        continue
     sql = oracles[name]
     t0 = time.monotonic()
     try:
